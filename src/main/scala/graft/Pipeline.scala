@@ -1247,7 +1247,6 @@ private[graft] object Stages {
     val inner = bool(spec \ "inner", default = false)
     val unwindFlag = bool(spec \ "unwind", default = false)
     val fromDoc = from.select(struct(from.columns.map(col).toIndexedSeq: _*).as("__as"))
-    val fromStruct = fromDoc.schema("__as").dataType.asInstanceOf[StructType]
 
     def regroupJoin(cond: Column, res: Column,
         docFrame: DataFrame = fromDoc): DataFrame = {
@@ -1897,7 +1896,7 @@ private[graft] object Stages {
     * pairs keeps only the gaps; the stubs union back with every other
     * column null. No driver-side loops, no cross join wider than
     * (partitions × grid). */
-  def densify(df: DataFrame, spec: JValue)(implicit ctx: ExprCtx): DataFrame = {
+  def densify(df: DataFrame, spec: JValue): DataFrame = {
     val JString(fieldName) = ((spec \ "field"): @unchecked)
     val partFields: List[String] = spec \ "partitionByFields" match {
       case JArray(xs) => xs.map { case JString(s) => s

@@ -79,8 +79,7 @@ private[graft] object SinkStages {
     * in the incoming schema overlays the target's value (documents here are
     * typed rows, not sparse maps).
     */
-  def merge(df: DataFrame, spec: JValue, store: DocumentStore)
-      (implicit ctx: ExprCtx): DataFrame = {
+  def merge(df: DataFrame, spec: JValue, store: DocumentStore): DataFrame = {
     val into = str(spec \ "into")
     val on = onFields(spec)
     // Mongo 4.4 form (beyond the reference's Merge.java surface): an UPDATE
@@ -255,7 +254,7 @@ private[graft] object SinkStages {
             if (!fields.exists(e => e._1 == "_id" && falsy(e._2)))
               env.get("_id").foreach(kept("_id") = _)
             fields.foreach {
-              case (f, v) if falsy(v)                => ()
+              case (_, v) if falsy(v)                => ()
               case (f, JInt(n)) if n == 1            => env.get(f).foreach(kept(f) = _)
               case (f, JBool(true))                  => env.get(f).foreach(kept(f) = _)
               case (f, v)                            => kept(f) = cexpr(v)(ctx0); dropType(f)
@@ -351,8 +350,7 @@ private[graft] object SinkStages {
 
   /** `$out` = `$merge {into, on:_id, whenMatched:replace, whenNotMatched:
     * insert}` (Out.java:29-41). */
-  def out(df: DataFrame, spec: JValue, store: DocumentStore)
-      (implicit ctx: ExprCtx): DataFrame = {
+  def out(df: DataFrame, spec: JValue, store: DocumentStore): DataFrame = {
     val into = spec match {
       case JString(s) => s
       case o: JObject => str(o \ "into")

@@ -193,7 +193,7 @@ object SparkEntry {
     * token be collected with it. */
   private val sessionTokens = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, String]())
-  private def sessionToken(s: SparkSession): String =
+  private[graft] def sessionToken(s: SparkSession): String =
     sessionTokens.computeIfAbsent(s,
       _ => java.util.UUID.randomUUID().toString)
 
@@ -1367,7 +1367,7 @@ object SparkEntry {
     // S-curve 1-(1-s^r)^b around the target threshold (midpoint Riemann
     // sum, fixed grid) — pure driver-side math (it PLANS the dedup job);
     // the oracle recomputes the whole sweep
-    "llm_lsh_band_plan" -> ((s, dir) => {
+    "llm_lsh_band_plan" -> ((s, _) => {
       tune(s)
       graft.llm.DedupOps.lshBandPlan(s, nPerms = 128, threshold = 0.7)
     }),

@@ -124,7 +124,7 @@ object Verify {
     val dumpParts: Option[Int] = sys.env.get("SPARK_GRAFT_DUMP_PARTS").map { s =>
       val n = try s.trim.toInt catch { case _: NumberFormatException =>
         System.err.println(s"[verify] SPARK_GRAFT_DUMP_PARTS must be a positive integer, got '$s'")
-        sys.exit(2); 0
+        sys.exit(2)
       }
       if (n <= 0) {
         System.err.println(s"[verify] SPARK_GRAFT_DUMP_PARTS must be positive, got $n")

@@ -1,7 +1,7 @@
 package graft.dynamic
 
 import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.databind.node.ArrayNode
 import org.json4s._
 
 import scala.jdk.CollectionConverters._

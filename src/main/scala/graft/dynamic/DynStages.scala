@@ -389,7 +389,7 @@ object DynPipeline {
             indexField.foreach(f => setPath(d, f.split('.').toList, NULL))
             Iterator.single((k, d))
           } else Iterator.empty
-        case single => // non-array unwinds to itself (Mongo)
+        case _ => // non-array unwinds to itself (Mongo)
           indexField match {
             case Some(f) =>
               val d = copy(doc).asInstanceOf[ObjectNode]
@@ -1270,7 +1270,6 @@ object DynPipeline {
     (spec \ "connectionString", spec \ "database") match {
       case (JString(uri), JString(dbn)) =>
         ctx.remoteCatalog.map(_(uri, dbn, from)).getOrElse {
-          import spark.implicits._
           new graft.sources.MongoStore(spark, uri, dbn).read(from)
             .toJSON.toDF("doc")
         }
@@ -1663,7 +1662,7 @@ object DynPipeline {
             if (raw < minD || raw > maxD) Iterator.empty
             else {
               val od = d.asInstanceOf[ObjectNode]
-              includeLocs.foreach(f => od.set[JsonNode](f, loc0.deepCopy()))
+              includeLocs.foreach(f => od.set[JsonNode](f, loc0.deepCopy[JsonNode]()))
               od.put(distanceField, raw * multiplier)
               Iterator.single(Row(k, render(od), raw * multiplier))
             }
@@ -1755,7 +1754,7 @@ object DynPipeline {
   private def rankFusion(df: DataFrame, spec: JValue, ctx: DynCtx): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.{BinaryType, DoubleType, StructField, StructType}
+    import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
     val JObject(pipes) = ((spec \ "input" \ "pipelines"): @unchecked)
     val weights: Map[String, Double] = spec \ "combination" \ "weights" match {
       case JObject(ws) => ws.map { case (n, v) => n -> (v match {
@@ -2071,7 +2070,7 @@ object DynPipeline {
       .withColumn("__nextMin", lead(col("__minC"), 1).over(Window.orderBy(col("__id"))))
     withMin.select(col("key"), col("doc"), col("__nextMin")).as(tuple3Enc)
       .mapPartitions { it =>
-        it.map { case (k, s, nextMin) =>
+        it.map { case (_, s, nextMin) =>
           val d = parse(s).asInstanceOf[ObjectNode]
           val id = obj()
           id.set[JsonNode]("min", d.path("__min"))
@@ -2453,7 +2452,7 @@ object DynPipeline {
           partOp.map(op => canonical(op.eval(dctx))).getOrElse(""))
         if (needAxis) vals += axisOf(sortOps.head._1.eval(dctx))
         sortOps.foreach { case (op, _) => vals += sortableKey(op.eval(dctx)) }
-        outs.zipWithIndex.foreach { case (o, i) => o.op match {
+        outs.foreach { o => o.op match {
           case "$sum" | "$avg" =>
             val v = o.input.get.eval(dctx)
             if (v != null && v.isNumber) { vals += v.doubleValue; vals += v.isIntegralNumber }

@@ -329,7 +329,7 @@ object CorpusOps {
     base.join(cov, Seq(idCol), "left")
       .select(col(idCol),
         concat_ws(" ", filter(col("__toks"),
-          (t, i) => !array_contains(
+          (_, i) => !array_contains(
             coalesce(col("__cov"), array().cast(ArrayType(IntegerType))), i)))
           .as("clean_text"),
         size(col("__toks")).as("n_tokens"),
@@ -533,39 +533,35 @@ object CorpusOps {
     * TOTAL ORDER by seeded md5 of the id (md5 replays bit-exactly in
     * DuckDB — the same verification convention as the dedup md5 twins).
     *
-    * 100 TB shape: the sort is Spark's range-partitioned `orderBy` (sampled
-    * range exchange, no single reducer). Global positions are computed
-    * WITHOUT a global window: partition-local indices come from
+    * 100 TB shape: the sort is [[graft.operators.GlobalRank.globalOrder]]
+    * (sampled range exchange + in-partition sort, no single reducer, the
+    * per-partition counts riding its checkpoint). Global positions are
+    * computed WITHOUT a global window: partition-local indices come from
     * `monotonically_increasing_id` (= partitionId<<33 | localRow on the
-    * SORTED frame), and each partition's base offset is one driver-side
-    * count per partition — metadata-scale, like the pack_windows rank
-    * offsets. `shard = pos % nShards` round-robins the shuffled order into
-    * equal output shards.
+    * materialized sorted frame) and each partition's base offset from the
+    * prefix counts — metadata-scale, like the pack_windows rank offsets.
+    * `shard = pos % nShards` round-robins the shuffled order into equal
+    * output shards.
     */
   def deterministicShuffle(df: DataFrame, idCol: String, seed: String,
       nShards: Int): DataFrame = {
     require(nShards > 0, "deterministicShuffle: nShards must be positive")
-    val sorted = df
-      .withColumn("skey", md5(concat(lit(seed + ":"), col(idCol).cast("string"))))
-      .orderBy("skey")
-      .withColumn("__mono", monotonically_increasing_id())
-      .withColumn("__pid", shiftright(col("__mono"), 33))
-      .withColumn("__local", col("__mono").bitwiseAND(lit((1L << 33) - 1)))
-      .localCheckpoint() // pin the partitioning: offsets below must see it
-    val counts = sorted.groupBy("__pid").count().collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offsets = counts.map { case (pid, n) =>
-      val o = (pid, acc); acc += n; o
-    }.toSeq
-    import sorted.sparkSession.implicits._
+    import graft.operators.GlobalRank.{globalOrder, PidCol}
+    val (sorted, offsets) = globalOrder(
+      df.withColumn("skey", md5(concat(lit(seed + ":"), col(idCol).cast("string")))),
+      Seq(col("skey").asc), Seq(lit(1L)))
+    import df.sparkSession.implicits._
     // one row per partition: broadcast-joined, so the offset lookup is a
     // narrow stage (a when-chain would blow up codegen at 10k partitions)
-    val offDf = offsets.toDF("__pid", "__off")
-    sorted.join(broadcast(offDf), "__pid")
+    val offDf = offsets.indices.init.map(p => (p, offsets(p)(0)))
+      .toDF(PidCol, "__off")
+    sorted
+      .withColumn("__local",
+        monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
+      .join(broadcast(offDf), PidCol)
       .withColumn("pos", col("__off") + col("__local"))
       .withColumn("shard", col("pos") % nShards)
-      .drop("__mono", "__pid", "__local", "__off")
+      .drop(PidCol, "__local", "__off")
   }
 
   /** Multinomial Naive-Bayes text classifier over hashed token buckets —
@@ -1082,29 +1078,22 @@ object CorpusOps {
     // rules/lang counts are cheap scans of the checkpoint and the raw
     // count comes straight from the source's metadata (parquet row
     // groups) — nothing failing the rules gate is ever materialized
-    // the rules/lang survivor counts RIDE the checkpoint job as an
-    // Observation (r17, the ckptCompact/GlobalRank discipline): two whole
-    // scans of the checkpoint become zero extra jobs; values are the same
-    // count(*) / count-where-__l the scans computed
-    val s1obs = org.apache.spark.sql.Observation()
-    val s1cp = TextOps.gopherC4Rules(corpus, textCol)
-      .filter(Seq("g_wordcount_ok", "g_mwl_ok", "g_symbol_ok",
-        "g_bullet_ok", "g_ellipsis_ok", "g_alpha_ok", "c4_no_lorem",
-        "c4_no_brace").map(col).reduce(_ && _))
-      .select(col(idCol), col(textCol),
-        (TextOps.langId(col(textCol)) === "en").as("__l"))
-      .observe(s1obs, count(lit(1)).as("n1"),
-        sum(when(col("__l"), 1L).otherwise(0L)).as("n2"))
-      .localCheckpoint(true)
+    // the rules/lang survivor counts RIDE the checkpoint job
+    // ([[graft.operators.Obs.checkpoint]], r17): two whole scans of the
+    // checkpoint become zero extra jobs
+    val (s1cp, s1row) = graft.operators.Obs.checkpoint(
+      TextOps.gopherC4Rules(corpus, textCol)
+        .filter(Seq("g_wordcount_ok", "g_mwl_ok", "g_symbol_ok",
+          "g_bullet_ok", "g_ellipsis_ok", "g_alpha_ok", "c4_no_lorem",
+          "c4_no_brace").map(col).reduce(_ && _))
+        .select(col(idCol), col(textCol),
+          (TextOps.langId(col(textCol)) === "en").as("__l")),
+      count(lit(1)).as("n1"),
+      coalesce(sum(when(col("__l"), 1L).otherwise(0L)), lit(0L)).as("n2"))
     val n0 = corpus.count()
-    val s1row = graft.operators.Obs.tryMap(s1obs).getOrElse {
-      val r = s1cp.agg(count(lit(1)),
-        sum(when(col("__l"), 1L).otherwise(0L))).head()
-      Map("n1" -> r.getLong(0), "n2" -> r.getLong(1))
-    }
-    val n1 = s1row("n1").asInstanceOf[Long]
+    val n1 = s1row.getLong(0)
     val s2 = s1cp.filter(col("__l")).select(col(idCol), col(textCol))
-    val n2 = Option(s1row("n2")).map(_.asInstanceOf[Long]).getOrElse(0L)
+    val n2 = s1row.getLong(1)
     // exact-dedup SURVIVOR COUNT == number of distinct text digests: the
     // min-id-per-digest semi-join kept exactly one doc per digest, so the
     // count never needed the groupBy + join it used to pay (r16 — one
@@ -1112,13 +1101,11 @@ object CorpusOps {
     // per-doc keep/drop decision itself is still what llm_dedup_exact pins)
     val n3 = s2.agg(count_distinct(md5(col(textCol)))).head().getLong(0)
     // the near-dedup survivor count rides s4's checkpoint the same way
-    val s4obs = org.apache.spark.sql.Observation()
-    val s4 = DedupOps.dedupNear(s2, textCol, idCol, shingleK = 3,
-        bands = 8, rowsPerBand = 4, threshold = 0.4, md5Mode = true)
-      .observe(s4obs, count(lit(1)).as("n4"))
-      .localCheckpoint(true)
-    val n4 = graft.operators.Obs.tryMap(s4obs)
-      .map(_("n4").asInstanceOf[Long]).getOrElse(s4.count())
+    val (s4, s4row) = graft.operators.Obs.checkpoint(
+      DedupOps.dedupNear(s2, textCol, idCol, shingleK = 3,
+        bands = 8, rowsPerBand = 4, threshold = 0.4, md5Mode = true),
+      count(lit(1)).as("n4"))
+    val n4 = s4row.getLong(0)
     val s5 = decontaminate(s4, bench, textCol, idCol, n = 8)
       .filter(col("contaminated") === 0)
     val rows = Seq(
@@ -1441,59 +1428,22 @@ object CorpusOps {
     * a GLOBAL running sum, which the naive window
     * (`sum(y) over (order by score)`) plans as an
     * `Exchange SinglePartition`. Here: range-repartition on (score desc,
-    * id asc) + in-partition sort (the [[graft.operators.GlobalRank]]
-    * recipe), ONE metadata-scale job for per-partition (rows, positives),
-    * broadcast prefix offsets, then a single stamping pass — no
-    * single-partition exchange at any corpus size. Ties on `score` are
-    * broken by `id`, so ranks are unique and both engines agree row for
-    * row. */
+    * id asc) + in-partition sort ([[graft.operators.GlobalRank.globalOrder]],
+    * per-partition (rows, positives) riding its checkpoint), broadcast
+    * prefix offsets, then a single stamping pass — no single-partition
+    * exchange at any corpus size. Ties on `score` are broken by `id`, so
+    * ranks are unique and both engines agree row for row. */
   def prCurve(scored: DataFrame, idCol: String, scoreCol: String,
       labelCol: String): DataFrame = {
-    val spark = scored.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // per-partition (rows, positives) ride the checkpoint job as an
-    // Observation (r17, the GlobalRank fusion): 2·parts conditional sums,
-    // metadata-scale; separate count job only when parts is large enough
-    // that the aggregate list would bloat codegen
-    val fuseStats = parts <= 128
-    val obs = org.apache.spark.sql.Observation()
-    val sorted0 = scored
-      .select(col(idCol), col(scoreCol).cast(DoubleType).as("__s"),
-        col(labelCol).cast(BooleanType).as("__y"))
-      .repartitionByRange(parts, col("__s").desc, col(idCol).asc)
-      .sortWithinPartitions(col("__s").desc, col(idCol).asc)
-      .withColumn("__pid", spark_partition_id())
-    val sorted = (if (fuseStats)
-        { val aggs = (0 until parts).flatMap(p => Seq(
-            sum(when(col("__pid") === p, 1L).otherwise(0L)).as(s"n$p"),
-            sum(when(col("__pid") === p && col("__y"), 1L).otherwise(0L))
-              .as(s"p$p")))
-          sorted0.observe(obs, aggs.head, aggs.tail: _*) }
-      else sorted0)
-      .localCheckpoint()
-    def statsJob(): Map[Int, (Long, Long)] =
-      sorted.groupBy(col("__pid"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("__y"), 1L).otherwise(0L)).as("p"))
-        .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val stats: Map[Int, (Long, Long)] =
-      if (fuseStats)
-        // bounded wait; fallback = the pre-fusion stats job (ADVICE r16)
-        graft.operators.Obs.tryMap(obs).map(row =>
-          (0 until parts).map(p => p -> ((row(s"n$p").asInstanceOf[Long],
-            row(s"p$p").asInstanceOf[Long]))).filter(_._2._1 > 0).toMap)
-          .getOrElse(statsJob())
-      else statsJob()
-    val totalP = stats.values.map(_._2).sum
+    val (sorted, offsets) = graft.operators.GlobalRank.globalOrder(
+      scored.select(col(idCol), col(scoreCol).cast(DoubleType).as("__s"),
+        col(labelCol).cast(BooleanType).as("__y")),
+      Seq(col("__s").desc, col(idCol).asc),
+      Seq(lit(1L), when(col("__y"), 1L).otherwise(0L)))
+    val totalP = offsets.last(1)
     require(totalP > 0, "prCurve needs at least one positive label")
-    var accN = 0L; var accP = 0L
-    val offs: Map[Int, (Long, Long)] = (0 until parts).map { pid =>
-      val o = pid -> ((accN, accP))
-      val (n, p) = stats.getOrElse(pid, (0L, 0L)); accN += n; accP += p
-      o
-    }.toMap
-    val bc = spark.sparkContext.broadcast(offs)
-    val pidIdx = sorted.schema.fieldIndex("__pid")
+    val bc = scored.sparkSession.sparkContext.broadcast(offsets)
+    val pidIdx = sorted.schema.fieldIndex(graft.operators.GlobalRank.PidCol)
     val sIdx = sorted.schema.fieldIndex("__s")
     val yIdx = sorted.schema.fieldIndex("__y")
     val outSchema = StructType(Seq(
@@ -1506,7 +1456,7 @@ object CorpusOps {
       var first = true; var rk = 0L; var tp = 0L
       it.map { r =>
         if (first) {
-          val (n0, p0) = bc.value(r.getInt(pidIdx)); rk = n0; tp = p0
+          val o = bc.value(r.getInt(pidIdx)); rk = o(0); tp = o(1)
           first = false
         }
         rk += 1

@@ -104,30 +104,22 @@ object DedupOps {
     * construction-time job per LSH query. Here the per-bucket size `m`
     * comes from a window over the SAME (band, bucket) key, and
     * Σ m(m−1)/2 = Σ_rows (m−1) / 2 plus max(m) ride the banding's
-    * localCheckpoint as an Observation — ONE linear job that both prices
-    * the join and materializes the banding the self-join then reads (the
-    * signature aggregate now runs exactly once). The budget still trips
-    * BEFORE the quadratic join is planned. */
+    * localCheckpoint ([[graft.operators.Obs.checkpoint]]) — ONE linear job
+    * that both prices the join and materializes the banding the self-join
+    * then reads (the signature aggregate now runs exactly once). The budget
+    * still trips BEFORE the quadratic join is planned. */
   private def guardedBanding(banded: DataFrame): DataFrame = {
     val budget = banded.sparkSession.conf
       .get("graft.dedup.maxPairBudget", "100000000").toLong
     val wB = Window.partitionBy(col("band"), col("bucket"))
-    val obs = org.apache.spark.sql.Observation()
-    val ck = banded.withColumn("__m", count(lit(1)).over(wB))
-      .observe(obs, sum(col("__m") - 1).as("twicePairs"),
-        max(col("__m")).as("maxM"))
-      .localCheckpoint()
-    // bounded wait; fallback = one explicit aggregate over the checkpoint
-    // (ADVICE r16: never hang on the eager-checkpoint-fires-metrics probe)
-    val row: Map[String, Any] = graft.operators.Obs.tryMap(obs).getOrElse {
-      val r = ck.agg(sum(col("__m") - 1), max(col("__m"))).head()
-      Map("twicePairs" -> r.get(0), "maxM" -> r.get(1))
-    }
-    val pairs = Option(row("twicePairs"))
-      .map(_.asInstanceOf[Long] / 2).getOrElse(0L)
+    val (ck, row) = graft.operators.Obs.checkpoint(
+      banded.withColumn("__m", count(lit(1)).over(wB)),
+      coalesce(sum(col("__m") - 1), lit(0L)).as("twicePairs"),
+      max(col("__m")).as("maxM"))
+    val pairs = row.getLong(0) / 2
     if (pairs > budget) throw new IllegalStateException(
       s"near-dup pair budget exceeded: the LSH buckets contain $pairs " +
-        s"candidate pairs (largest bucket m=${row("maxM")}) > " +
+        s"candidate pairs (largest bucket m=${row.get(1)}) > " +
         s"graft.dedup.maxPairBudget=$budget — a viral near-dup cluster " +
         "makes per-pair Jaccard verification quadratic in the cluster " +
         "size; use dedupNearLsh (Θ(Σ m) star edges, no per-pair verify) " +
@@ -834,7 +826,7 @@ object DedupOps {
     base.join(cov, Seq(idCol), "left")
       .select(col(idCol),
         concat_ws(" ", filter(col("__toks"),
-          (t, i) => !array_contains(
+          (_, i) => !array_contains(
             coalesce(col("__cov"), array().cast(ArrayType(IntegerType))), i)))
           .as("clean_text"),
         size(col("__toks")).as("n_tokens"),

@@ -40,7 +40,7 @@ object VectorOps {
   private val idxCells =
     new java.util.concurrent.ConcurrentHashMap[String, IdxCell]()
   private def idxKey(spark: org.apache.spark.sql.SparkSession, path: String) =
-    s"${System.identityHashCode(spark)} \u0000 $path"
+    s"${graft.SparkEntry.sessionToken(spark)} \u0000 $path"
   private def invalidateIdx(path: String): Unit =
     idxCells.keySet.removeIf(_.endsWith("\u0000 " + path))
   private def loadIdx(spark: org.apache.spark.sql.SparkSession,
@@ -87,20 +87,15 @@ object VectorOps {
     * graph pole). Coalesce is a NARROW dependency on the already-
     * materialized checkpoint: no second shuffle, no recompute, identical
     * rows — only the physical slice count changes. Frames at or above
-    * `rowsPerPart` rows/partition are untouched, so a production-scale
-    * corpus keeps its parallelism. */
-  private def ckptCompact(df: DataFrame,
-      rowsPerPart: Long = 65536): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-    // bounded wait + explicit-count fallback (ADVICE r16): never hang on
-    // the probed-but-undocumented "eager checkpoint fires CollectMetrics"
-    val n = graft.operators.Obs.tryMap(obs)
-      .map(_("n").asInstanceOf[Long])
-      .getOrElse(ck.agg(count(lit(1))).head().getLong(0))
+    * 65536 rows/partition are untouched, so a production-scale corpus keeps
+    * its parallelism. Returns the frame and the observed row: the count `n`
+    * first, then `extra` in order. */
+  private def ckptCompact(df: DataFrame, extra: Column*): (DataFrame, Row) = {
+    val (ck, row) =
+      graft.operators.Obs.checkpoint(df, count(lit(1)).as("n") +: extra: _*)
     val cur = ck.rdd.getNumPartitions
-    val want = math.max(1L, math.min(cur.toLong, n / rowsPerPart + 1)).toInt
-    (if (want < cur) ck.coalesce(want) else ck, n)
+    val want = math.max(1L, math.min(cur.toLong, row.getLong(0) / 65536 + 1)).toInt
+    (if (want < cur) ck.coalesce(want) else ck, row)
   }
 
   /** Broadcast a (localCheckpointed) normalized-vector table only when its
@@ -1081,10 +1076,10 @@ object VectorOps {
     * both). Returns (src, nn_id, sim, rank). */
   def knnGraph(df: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int = 2, maxRev: Int = 0, sample: Int = 0): DataFrame = {
-    val (vecs, n) = ckptCompact(
+    val (vecs, st) = ckptCompact(
       spread(df).select(col(idCol).cast(LongType).as("id"),
         normalize(col(vecCol).cast(ArrayType(DoubleType))).as("__v")))
-    knnGraphOn(vecs, k, iters, maxRev, sample, knownRows = Some(n))
+    knnGraphOn(vecs, k, iters, maxRev, sample, knownRows = Some(st.getLong(0)))
   }
 
   /** [[knnGraph]] over an ALREADY normalized, materialized `(id, __v)`
@@ -1285,7 +1280,7 @@ object VectorOps {
       edgesFor: (DataFrame, Seq[Long]) => DataFrame,
       k: Int, beam: Int, rounds: Int,
       partIdOf: Option[Column => Column] = None,
-      entryCount: Int = Int.MaxValue,
+      entryCount: Int,
       entryPartsPre: Option[Seq[Long]] = None): DataFrame = {
     require(k <= beam, "k must not exceed the beam width")
     // materialize the normalized query frame ONCE (r17): it joins into the
@@ -1300,23 +1295,13 @@ object VectorOps {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("id"))
     // localCheckpoint + the frame's partition ids in ONE action: the
-    // Observation's collect_set aggregate is computed by the checkpoint job
-    // itself and read back after it completes (bounded: values are pmod
-    // results, ≤ nParts distinct ints).
+    // collect_set aggregate is computed by the checkpoint job itself
+    // (bounded: values are pmod results, ≤ nParts distinct ints).
     def ckptWithParts(df: DataFrame): (DataFrame, Seq[Long]) = partIdOf match {
       case Some(p) =>
-        val obs = org.apache.spark.sql.Observation()
-        val ck = df.observe(obs, collect_set(p(col("id"))).as("parts"))
-          .localCheckpoint()
-        // bounded wait; fallback = the pre-r16 distinct() pass over the
-        // materialized checkpoint (ADVICE r16)
-        val parts = graft.operators.Obs.tryMap(obs)
-          .map(_("parts").asInstanceOf[scala.collection.Seq[Any]]
-            .map { case l: Long => l }.toSeq)
-          .getOrElse(ck.select(p(col("id")).as("__p")).distinct()
-            .collect().map(_.getLong(0)).toSeq)
-          .sorted
-        (ck, parts)
+        val (ck, row) = graft.operators.Obs.checkpoint(df,
+          collect_set(p(col("id"))).as("parts"))
+        (ck, row.getSeq[Long](0).sorted)
       case None => (df.localCheckpoint(), Nil)
     }
     // Dedup + beam cap in ONE window pass (r16 optimization: the old
@@ -1422,9 +1407,10 @@ object VectorOps {
     // knnGraphOn's broadcast-budget probe its own count job; the compacted
     // partitioning keeps a toy build slice from dragging 32 near-empty
     // partitions through every descent-round job
-    val (vecs, nVecs) = ckptCompact(
+    val (vecs, st) = ckptCompact(
       spread(corpus).select(col(idCol).cast(LongType).as("id"),
         normalize(col(vecCol).cast(ArrayType(DoubleType))).as("__v")))
+    val nVecs = st.getLong(0)
     // Scale-adaptive default layout (r16, guide §6: derive file layout from
     // input size, not a constant tuned for either local mode or the
     // cluster): ~128k vectors per partition ≈ 64 MB parquet at dim=64 —
@@ -1549,30 +1535,16 @@ object VectorOps {
     val nParts = idx.nParts
     val entryPool = idx.entryPool
     val k = idx.k
-    // the arrival batch's partition ids ride the checkpoint job as an
-    // Observation (r16: was a separate distinct().collect() pass) — ≤
-    // nParts ints, metadata-scale
-    val nvObs = org.apache.spark.sql.Observation()
-    val nv0 = spread(newVecs).select(col(idCol).cast(LongType).as("id"),
-      normalize(col(vecCol).cast(ArrayType(DoubleType))).as("__v"))
-      .observe(nvObs,
-        collect_set(pmod(col("id"), lit(nParts.toLong))).as("parts"),
-        count(lit(1)).as("n"))
-      .localCheckpoint()
-    val nvRow = graft.operators.Obs.tryMap(nvObs).getOrElse(Map(
-      "parts" -> nv0.select(pmod(col("id"), lit(nParts.toLong)).as("__p"))
-        .distinct().collect().map(_.getLong(0)).toSeq,
-      "n" -> nv0.agg(count(lit(1))).head().getLong(0)))
-    val newParts = nvRow("parts").asInstanceOf[scala.collection.Seq[Any]]
-      .map { case l: Long => l }.toSeq.sorted
-    // compact the arrival frame like ckptCompact (its count already rode
-    // the observe): an incremental batch is metadata-scale next to the
-    // corpus and must not drag defaultParallelism empty slices through
-    // the serve + re-descent chain below
-    val nvN = nvRow("n").asInstanceOf[Long]
-    val nvCur = nv0.rdd.getNumPartitions
-    val nvWant = math.max(1L, math.min(nvCur.toLong, nvN / 65536L + 1)).toInt
-    val nv = if (nvWant < nvCur) nv0.coalesce(nvWant) else nv0
+    // the arrival batch's partition ids ride the checkpoint job (r16: was a
+    // separate distinct().collect() pass) — ≤ nParts ints, metadata-scale;
+    // compacted because an incremental batch is metadata-scale next to the
+    // corpus and must not drag defaultParallelism empty slices through the
+    // serve + re-descent chain below
+    val (nv, nvRow) = ckptCompact(
+      spread(newVecs).select(col(idCol).cast(LongType).as("id"),
+        normalize(col(vecCol).cast(ArrayType(DoubleType))).as("__v")),
+      collect_set(pmod(col("id"), lit(nParts.toLong))).as("parts"))
+    val newParts = nvRow.getSeq[Long](1).sorted
     // refuse, don't corrupt — BOTH collision classes: an id duplicated
     // WITHIN the arrival batch would append two vector rows for one id
     // (duplicate join candidates, rebuild-equality broken) just as
@@ -1617,17 +1589,10 @@ object VectorOps {
     // 3. touched old nodes merge the reverse edges into their stored top-k
     val revCand = newOld.select(col("nbr").as("src"), col("src").as("nbr"),
       col("sim"))
-    val toObs = org.apache.spark.sql.Observation()
-    val touchedOld = revCand.select(col("src").as("id")).distinct()
-      .observe(toObs,
-        collect_set(pmod(col("id"), lit(nParts.toLong))).as("parts"))
-      .localCheckpoint()
-    val touchedOldParts = graft.operators.Obs.tryMap(toObs)
-      .map(_("parts").asInstanceOf[scala.collection.Seq[Any]]
-        .map { case l: Long => l }.toSeq)
-      .getOrElse(touchedOld.select(pmod(col("id"), lit(nParts.toLong))
-        .as("__p")).distinct().collect().map(_.getLong(0)).toSeq)
-    val touchedParts = (newParts ++ touchedOldParts).distinct.sorted
+    val (touchedOld, toRow) = graft.operators.Obs.checkpoint(
+      revCand.select(col("src").as("id")).distinct(),
+      collect_set(pmod(col("id"), lit(nParts.toLong))).as("parts"))
+    val touchedParts = (newParts ++ toRow.getSeq[Long](0)).distinct.sorted
     val oldRows = idx.graph
       .filter(col("part").isin(touchedParts: _*))
       .select(col("src"), col("nbr"), col("sim"), col("rank"))

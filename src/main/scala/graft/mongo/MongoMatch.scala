@@ -72,7 +72,7 @@ object MongoMatch {
     }
 
   private def opPredicate(c: Column, op: String, v: JValue,
-      fieldType: Option[org.apache.spark.sql.types.DataType] = None)
+      fieldType: Option[org.apache.spark.sql.types.DataType])
       (implicit ctx: ExprCtx): Column = op match {
     case "$eq"  => c <=> MongoExpr.literal(v)
     case "$ne"  => !(c <=> MongoExpr.literal(v))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -8,65 +8,66 @@ import org.apache.spark.sql.types._
   * `rank().over(Window.orderBy(k))`, which plans an `Exchange
   * SinglePartition` and serializes the whole input through ONE reducer.
   *
-  * Shape: range-repartition on the key (ties co-locate, the ordering is
-  * total across partitions) + an in-partition sort, localCheckpoint so the
-  * sort runs once, one cheap job for per-partition row counts, then a
-  * single per-partition pass stamping `rank = partitionOffset + localRank`
-  * with the offsets broadcast. Ranks match SQL `rank()` exactly (ties share
-  * the minimum rank) because equal keys can never straddle a range
-  * boundary. Used by `$bucketAuto` in both engines.
+  * Shape ([[globalOrder]]): range-repartition on the order columns (ties
+  * co-locate, the ordering is total across partitions) + an in-partition
+  * sort, localCheckpoint so the sort runs once, per-partition sums riding
+  * that checkpoint job, prefix offsets driver-side; each caller then stamps
+  * its own positions in one pass with the offsets broadcast. Ranks match
+  * SQL `rank()` exactly (ties share the minimum rank) because equal keys
+  * can never straddle a range boundary. Used by `$bucketAuto` in both
+  * engines, and by `CorpusOps.prCurve` / `deterministicShuffle`.
   */
 object GlobalRank {
+  /** The partition id [[globalOrder]] tags each row with. */
+  val PidCol = "__grank_pid"
+
+  /** Up to this many partitions the per-partition sums ride the checkpoint
+    * as `parts × measures` observed aggregates; above it they run as one
+    * explicit grouped job, since that many aggregate expressions would
+    * bloat codegen (and the fusion only pays in the fixed-cost regime). */
+  val MaxFusedParts = 128
+
+  /** `df` range-partitioned and sorted on `order` over
+    * `spark.sql.shuffle.partitions` partitions, tagged with [[PidCol]] and
+    * materialized, plus the prefix sums of each (long) `measures` column:
+    * entry `p` holds the sums over partitions `< p`, the last entry (index
+    * `parts`) the totals. */
+  def globalOrder(df: DataFrame, order: Seq[Column],
+      measures: Seq[Column]): (DataFrame, Array[Array[Long]]) = {
+    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val sorted = df.repartitionByRange(parts, order: _*)
+      .sortWithinPartitions(order: _*)
+      .withColumn(PidCol, spark_partition_id())
+    val m = measures.size
+    val (ck, perPart) =
+      if (parts <= MaxFusedParts) {
+        val aggs = for (p <- 0 until parts; (e, i) <- measures.zipWithIndex)
+          yield coalesce(sum(when(col(PidCol) === p, e)), lit(0L)).as(s"s${p}_$i")
+        val (ck, row) = Obs.checkpoint(sorted, aggs: _*)
+        (ck, Array.tabulate(parts, m)((p, i) => row.getLong(p * m + i)))
+      } else {
+        val ck = sorted.localCheckpoint()
+        val sums = measures.map(e => sum(e))
+        val got = ck.groupBy(col(PidCol)).agg(sums.head, sums.tail: _*)
+          .collect().map(r => r.getInt(0) -> Array.tabulate(m)(i => r.getLong(i + 1)))
+          .toMap
+        (ck, Array.tabulate(parts)(p => got.getOrElse(p, new Array[Long](m))))
+      }
+    (ck, perPart.scanLeft(new Array[Long](m))((acc, s) =>
+      Array.tabulate(m)(i => acc(i) + s(i))))
+  }
 
   /** Returns `df` plus `rkName` = rank() over (ORDER BY `key` ASC NULLS
     * FIRST) and `nName` = total row count, without a single-partition
     * exchange. The result is materialized (localCheckpoint). */
   def withRank(df: DataFrame, key: String, rkName: String, nName: String): DataFrame = {
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // Per-partition row counts ride the checkpoint job as an Observation
-    // (r17 — was a separate groupBy+collect job; the per-job fixed cost is
-    // the dominant term for every metadata-scale caller): one conditional
-    // sum per partition, `parts` longs total. Falls back to the separate
-    // count job when `parts` is large enough that `parts` aggregate
-    // expressions would bloat codegen (the observe is a win only in the
-    // fixed-cost regime anyway).
-    val fuseCounts = parts <= 128
-    val obs = org.apache.spark.sql.Observation()
-    val sorted0 = df
-      .repartitionByRange(parts, col(key).asc)
-      .sortWithinPartitions(col(key).asc)
-      .withColumn("__grank_pid", spark_partition_id())
-    val sorted = (if (fuseCounts)
-        { val aggs = (0 until parts).map(p =>
-            sum(when(col("__grank_pid") === p, 1L).otherwise(0L))
-              .as(s"c$p"))
-          sorted0.observe(obs, aggs.head, aggs.tail: _*) }
-      else sorted0)
-      .localCheckpoint()
-    val pidIdx = sorted.schema.fieldIndex("__grank_pid")
+    val (sorted, offsets) = globalOrder(df, Seq(col(key).asc), Seq(lit(1L)))
+    val total = offsets.last(0)
+    val bcOffsets = df.sparkSession.sparkContext.broadcast(offsets.map(_(0)))
+    val pidIdx = sorted.schema.fieldIndex(PidCol)
     val keyIdx = sorted.schema.fieldIndex(key)
-    def countsJob(): Map[Int, Long] =
-      sorted.groupBy(col("__grank_pid")).count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val counts: Map[Int, Long] =
-      if (fuseCounts)
-        // bounded wait; fallback = the pre-fusion count job (ADVICE r16)
-        Obs.tryMap(obs).map(row =>
-          (0 until parts).map(p => p -> row(s"c$p").asInstanceOf[Long])
-            .filter(_._2 > 0).toMap)
-          .getOrElse(countsJob())
-      else countsJob()
-    val total = counts.values.sum
-    val offsets: Map[Int, Long] = {
-      var acc = 0L
-      (0 until parts).map { pid =>
-        val o = pid -> acc; acc += counts.getOrElse(pid, 0L); o
-      }.toMap
-    }
-    val bcOffsets = spark.sparkContext.broadcast(offsets)
     val outSchema = StructType(
-      sorted.schema.fields.filterNot(_.name == "__grank_pid") ++ Seq(
+      sorted.schema.fields.filterNot(_.name == PidCol) ++ Seq(
         StructField(rkName, LongType, nullable = false),
         StructField(nName, LongType, nullable = false)))
     def sameKey(a: Any, b: Any): Boolean = (a, b) match {

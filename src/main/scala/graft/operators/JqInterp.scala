@@ -379,7 +379,7 @@ object JqInterp {
           val names = regexGroupNames(re.textValue)
           val s = in.textValue
           val m = pat.matcher(s)
-          var found = scala.collection.mutable.ListBuffer
+          val found = scala.collection.mutable.ListBuffer
             .empty[(Int, Int, JsonNode)]
           while (m.find() && (fn == "gsub" || found.isEmpty)) {
             found += ((m.start, m.end, captureObject(m, names)))

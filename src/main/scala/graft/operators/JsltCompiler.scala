@@ -513,8 +513,6 @@ object JsltCompiler {
     dedup ++ matched
   }
 
-  private def numLit(v: Any): Column = lit(v)
-
   /** JSLT falsiness: null, false, 0, "" (and empty array/object) are false. */
   private def truthy(tc: TC): Column = tc.typ match {
     case Some(BooleanType)     => coalesce(tc.col, lit(false))

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Kafka transport binding — the production source/sink for the reference's
   * message loop (Pipeline.java:273-299 consumes a topic and produces to

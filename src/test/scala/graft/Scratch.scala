@@ -581,41 +581,6 @@ object Scratch {
         s"$out/knn_sample_window_after.txt")
       println("MISCPLANS dumped to " + out)
     }
-    else if (args(0) == "aqeprobe") {
-      // aqeprobe: does AQE coalesce the tiny window/dedup shuffles the beam
-      // rounds and graph builds are made of, and how many partitions does a
-      // localCheckpoint of such a frame carry into downstream jobs?
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      println("adaptive.enabled=" + spark.conf.get("spark.sql.adaptive.enabled")
-        + " coalescePartitions=" +
-        spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-        + " shuffle.partitions=" + spark.conf.get("spark.sql.shuffle.partitions"))
-      val df = spark.range(6000)
-        .select((col("id") % 500).as("query_id"), col("id").as("id"),
-          rand(7).as("sim"))
-      val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("id"))
-      val kept = df.withColumn("__r", row_number().over(w))
-        .filter(col("__r") <= 12).drop("__r")
-      val ck = kept.localCheckpoint()
-      println("checkpointed partitions=" + ck.rdd.getNumPartitions)
-      val dd = df.dropDuplicates("query_id", "id")
-      println("dropDup partitions=" + dd.rdd.getNumPartitions)
-      val t0 = System.nanoTime()
-      ck.select(pmod(col("id"), lit(8L)).as("p")).distinct().collect()
-      println(f"partsOf-job ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      val t1 = System.nanoTime()
-      ck.count()
-      println(f"count-job ${(System.nanoTime() - t1) / 1e9}%.3f s")
-      // does an Observation fire on localCheckpoint(eager), with a bounded
-      // wait? (the fused partsOf design depends on it)
-      val obs = org.apache.spark.sql.Observation("parts")
-      val ck2 = kept.observe(obs, collect_set(pmod(col("id"), lit(8L))))
-        .localCheckpoint()
-      val got = obs.getAsJava // blocks until the action's metrics arrive
-      println("observe-on-checkpoint parts=" + got)
-      println("ck2 partitions=" + ck2.rdd.getNumPartitions)
-    }
     else if (args(0) == "gsaveparts") {
       // gsaveparts <sfDir>: cold graphSave+graphServe cost anatomy on the
       // FIXED 500-doc slice (the bench's savedRecallGraph shape) — where do
