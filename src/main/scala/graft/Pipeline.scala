@@ -1,5 +1,6 @@
 package graft
 
+import graft.StageSpec._
 import graft.mongo.{ExprCtx, MongoExpr, MongoMatch}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -38,37 +39,84 @@ final class Pipeline(
     trace: Boolean = false) {
 
   def run(df: DataFrame, pipelineJson: String): DataFrame =
-    run(df, JsonMethods.parse(pipelineJson))
+    run(df, StageSpec.parse(pipelineJson))
 
   /** Per-stage profiling (Pipeline.java:289-292,332-339: wall-time logs when
     * `context.trace` or a stage-level `_trace: true`): the Spark-idiomatic
     * equivalent is an `observe` metric per traced stage — row counts surface
     * through QueryExecutionListener / StreamingQueryListener without forcing
     * extra actions. */
-  def run(df: DataFrame, pipeline: JValue): DataFrame = pipeline match {
-    case JArray(stages) =>
-      stages.zipWithIndex.foldLeft(df) {
-        case (d, (JObject(fields), i)) =>
-          val stageTraced = trace ||
-            fields.contains(("_trace", JBool(true))) // Pipeline.java:332
-          fields.find(f => f._1 != "_trace") match {
-            case Some((name, spec)) =>
-              val out = applyStage(d, name, spec)
-              if (stageTraced)
-                out.observe(s"stage${i}_${name.stripPrefix("$")}",
-                  count(lit(1)).as("rows"))
-              else out
-            case None => d
-          }
-        case (_, (other, _)) =>
-          throw new IllegalArgumentException(s"bad stage: $other")
-      }
-    case other => throw new IllegalArgumentException(s"pipeline must be an array: $other")
-  }
+  def run(df: DataFrame, pipeline: JValue): DataFrame =
+    run(df, StageSpec.parse(pipeline))
 
-  def applyStage(df: DataFrame, name: String, spec: JValue): DataFrame = {
+  def run(df: DataFrame, stages: List[Stage]): DataFrame =
+    stages.foldLeft(df) { (d, st) =>
+      val out = applyStage(d, st)
+      if (trace || st.trace)
+        out.observe(s"stage${st.index}_${st.name.stripPrefix("$")}",
+          count(lit(1)).as("rows"))
+      else out
+    }
+
+  def applyStage(df: DataFrame, st: Stage): DataFrame = {
     implicit val ctx: ExprCtx = Stages.ctxFor(df)
-    name match {
+    val spec = st.spec
+    st.args match {
+      case u: Unwind => Stages.unwind(df, u)
+      case g: Group => // _continuous: exact per-message emission (streaming)
+        if (g.continuous) graft.streaming.ContinuousGroup(df, g)
+        else Stages.group(df, g)
+      case Count(f) => Stages.countStage(df, f)
+      case l: Lookup => Stages.lookup(df, l, catalog,
+        remoteCatalog.getOrElse((uri, dbn, coll) =>
+          new graft.sources.MongoStore(df.sparkSession, uri, dbn).read(coll)))
+      case d: Deduplicate => Stages.deduplicate(df, d)
+      case m: StageSpec.Merge => SinkStages.merge(df, m, store)
+      case d: Delete      => SinkStages.delete(df, d, store)
+      case s: Send        => SinkStages.send(df, s, producer)
+      case d: Delay       => SinkStages.delay(df, d, producer, store)
+      case p: Probe       => SinkStages.probe(df, p, producer)
+      case p: Per         => SinkStages.per(df, p)
+      case w: SetWindowFields => Stages.setWindowFields(df, w)
+      case f: Fill        => Stages.fill(df, f)
+      case d: Densify     => Stages.densify(df, d)
+      // ---- batch-only MQL stages the reference excludes by design (its
+      // streams are unbounded, SURVEY §2.8); legitimate on bounded inputs --
+      case Sort(keys)     => Stages.sortStage(df, keys)
+      case Limit(n)       => df.limit(n)
+      case Skip(n)        => df.offset(n)
+      case Sample(n) => // DEVIATION: deterministic hash order, not random —
+        // reproducible runs and oracle checks beat true randomness here.
+        // Priority = xxhash64 of the canonical {"_id": <id>} rendering so
+        // BOTH engines pick the same subset (the dynamic engine hashes the
+        // same string); corpora without _id hash all columns (engine-local).
+        val priority =
+          if (df.columns.contains("_id")) {
+            // PRECONDITION (cross-engine parity): the trick only holds
+            // for a SCALAR string/integer _id — to_json renders
+            // timestamps/structs engine-specifically, so hashes would
+            // silently diverge. Fail loudly instead.
+            val t = df.schema("_id").dataType
+            require(Seq[DataType](StringType, IntegerType, LongType,
+              ShortType, ByteType).contains(t),
+              s"$$sample cross-engine determinism needs a scalar " +
+                s"string/integer _id, got $t — project one first " +
+                "($toString/$toLong), or drop _id to hash the full row")
+            xxhash64(to_json(struct(col("_id").as("_id"))))
+          } else xxhash64(df.columns.map(col).toIndexedSeq: _*)
+        // full-row tiebreak: duplicate _ids still order deterministically
+        // WITHIN this engine (cross-engine parity needs unique _ids)
+        df.orderBy(priority, xxhash64(df.columns.map(col).toIndexedSeq: _*))
+          .limit(n)
+      case Score(e, norm) =>
+        // Mongo 8.2: custom scoring — evaluates `score` per document into
+        // the hidden __score column ({"$meta": "score"} reads it), with
+        // optional per-stream normalization (see Stages.normalizeScore).
+        Stages.normalizeScore(df.withColumn("__score",
+          MongoExpr.compile(e).cast(DoubleType)), "__score", norm)
+      case f: Fusion if st.name == "$rankFusion" => rankFusion(df, f)
+      case f: Fusion => scoreFusion(df, f)
+      case Raw => st.name match {
       case "$match"       => df.filter(MongoMatch.compile(spec))
       case "$project"     => Stages.project(df, spec)
       case "$addFields" | "$set" => Stages.addFields(df, spec)
@@ -87,69 +135,10 @@ final class Pipeline(
           case _ => keyExpr.cast(StringType)
         }
         df.withColumn("key", keyCol)
-      case "$unwind"      => Stages.unwind(df, spec)
-      case "$group" => // _continuous: exact per-message emission (streaming)
-        if ((spec \ "_continuous") == JBool(true))
-          graft.streaming.ContinuousGroup(df, spec)
-        else Stages.group(df, spec)
-      case "$bucket"      => Stages.group(df, Stages.bucketToGroup(spec))
-      case "$count"       => Stages.countStage(df, spec)
-      case "$lookup"      => Stages.lookup(df, spec, catalog,
-        remoteCatalog.getOrElse((uri, dbn, coll) =>
-          new graft.sources.MongoStore(df.sparkSession, uri, dbn).read(coll)))
-      case "$deduplicate" => Stages.deduplicate(df, spec)
       case "$redact"      => Stages.redact(df, spec)
-      case "$merge"       => SinkStages.merge(df, spec, store)
-      case "$out"         => SinkStages.out(df, spec, store)
-      case "$delete"      => SinkStages.delete(df, spec, store)
-      case "$send"        => SinkStages.send(df, spec, producer)
-      case "$delay"       => SinkStages.delay(df, spec, producer, store)
-      case "$probe"       => SinkStages.probe(df, spec, producer)
-      case "$per"         => SinkStages.per(df, spec)
       case "$http"        => graft.operators.HttpStage(df, spec)
       case "$jslt"        => graft.operators.ScriptStages.jslt(df, spec)
       case "$jq"          => graft.operators.ScriptStages.jq(df, spec)
-      case "$setWindowFields" => Stages.setWindowFields(df, spec)
-      case "$fill"        => Stages.fill(df, spec)
-      case "$densify"     => Stages.densify(df, spec)
-      // ---- batch-only MQL stages the reference excludes by design (its
-      // streams are unbounded, SURVEY §2.8); legitimate on bounded inputs --
-      case "$sort"        => Stages.sortStage(df, spec)
-      case "$limit" => spec match {
-        case JInt(n) => df.limit(n.toInt)
-        case other   => throw new IllegalArgumentException(s"$$limit: $other")
-      }
-      case "$skip" => spec match {
-        case JInt(n) => df.offset(n.toInt)
-        case other   => throw new IllegalArgumentException(s"$$skip: $other")
-      }
-      case "$sample" => // DEVIATION: deterministic hash order, not random —
-        // reproducible runs and oracle checks beat true randomness here.
-        // Priority = xxhash64 of the canonical {"_id": <id>} rendering so
-        // BOTH engines pick the same subset (the dynamic engine hashes the
-        // same string); corpora without _id hash all columns (engine-local).
-        spec \ "size" match {
-          case JInt(n) =>
-            val priority =
-              if (df.columns.contains("_id")) {
-                // PRECONDITION (cross-engine parity): the trick only holds
-                // for a SCALAR string/integer _id — to_json renders
-                // timestamps/structs engine-specifically, so hashes would
-                // silently diverge. Fail loudly instead.
-                val t = df.schema("_id").dataType
-                require(Seq[DataType](StringType, IntegerType, LongType,
-                  ShortType, ByteType).contains(t),
-                  s"$$sample cross-engine determinism needs a scalar " +
-                    s"string/integer _id, got $t — project one first " +
-                    "($toString/$toLong), or drop _id to hash the full row")
-                xxhash64(to_json(struct(col("_id").as("_id"))))
-              } else xxhash64(df.columns.map(col).toIndexedSeq: _*)
-            // full-row tiebreak: duplicate _ids still order deterministically
-            // WITHIN this engine (cross-engine parity needs unique _ids)
-            df.orderBy(priority, xxhash64(df.columns.map(col).toIndexedSeq: _*))
-              .limit(n.toInt)
-          case other => throw new IllegalArgumentException(s"$$sample: $other")
-        }
       case "$sortByCount" =>
         df.groupBy(MongoExpr.compile(spec).as("_id"))
           .agg(count(lit(1)).as("count"))
@@ -182,166 +171,6 @@ final class Pipeline(
       case "$vectorSearch" => Stages.vectorSearch(df, spec)
       case "$search"       => Stages.search(df, spec)
       case "$geoNear"      => Stages.geoNear(df, spec)
-      case "$rankFusion" =>
-        // Mongo 8.1 hybrid search: each input pipeline is a SELECTION
-        // pipeline over the same stream; its bounded output is ranked and
-        // the ranked lists fuse by reciprocal rank (constant 60, like
-        // Mongo) on _id. The fused score lands in the hidden __score
-        // column, surfaced via {"$meta": "score"}.
-        import org.apache.spark.sql.expressions.Window
-        val JObject(pipes) = ((spec \ "input" \ "pipelines"): @unchecked)
-        val weights: Map[String, Double] = spec \ "combination" \ "weights" match {
-          case JObject(ws) => ws.map { case (n, v) => n -> (v match {
-            case JInt(i) => i.toDouble; case JLong(l) => l.toDouble
-            case JDouble(d) => d; case _ => 1.0 }) }.toMap
-          case _ => Map.empty
-        }
-        require(df.columns.contains("_id"), "$rankFusion fuses on _id")
-        val docCols = df.columns.toSeq
-        val allowed = Set("$match", "$sort", "$limit", "$skip", "$sample",
-          "$vectorSearch", "$search")
-        val contribs = pipes.map { case (pname, pstages) =>
-          val JArray(stages) = (pstages: @unchecked)
-          val names = stages.collect { case JObject(fs) => fs.head._1 }
-          val bad = names.filterNot(allowed)
-          if (bad.nonEmpty) throw new IllegalArgumentException(
-            s"$$rankFusion pipeline '$pname': only selection stages " +
-              s"(${allowed.mkString(" ")}) are allowed, got ${bad.mkString(" ")}")
-          // boundedness: a $limit or $vectorSearch (its limit) caps the
-          // ranked list, so the rank window is over a SMALL candidate set —
-          // never a whole-collection single-partition sort
-          if (!names.contains("$limit") && !names.contains("$vectorSearch"))
-            throw new IllegalArgumentException(
-              s"$$rankFusion pipeline '$pname' must be bounded: add a $$limit")
-          val out = run(df, pstages)
-          // rank order: the trailing $sort's keys, else the vector score
-          val sortCols: Seq[Column] =
-            stages.reverse.collectFirst {
-              case JObject(List(("$sort", JObject(keys)))) =>
-                keys.map { case (f, dir) =>
-                  val asc = dir match {
-                    case JInt(i)    => i >= 0
-                    case JLong(l)   => l >= 0
-                    case JDouble(x) => x >= 0
-                    case _          => true
-                  }
-                  if (asc) Stages.sortKeyCol(out, f).asc
-                  else Stages.sortKeyCol(out, f).desc
-                }
-            }.getOrElse {
-              if (names.contains("$vectorSearch")) Seq(col("__vsScore").desc)
-              else if (names.contains("$search")) Seq(col("__searchScore").desc)
-              else throw new IllegalArgumentException(
-                s"$$rankFusion pipeline '$pname' must rank: end with " +
-                  "$sort or include $vectorSearch/$search")
-            }
-          val w = weights.getOrElse(pname, 1d)
-          val rank = row_number().over(
-            Window.orderBy(sortCols :+ col("_id").asc: _*))
-          out.select(struct(docCols.map(col): _*).as("__doc"),
-              rank.as("__rank"))
-            .select(col("__doc"), (lit(w) / (lit(60) + col("__rank"))).as("__rrf"))
-        }
-        contribs.reduce(_ unionByName _)
-          .groupBy(col("__doc").getField("_id").as("__fid"))
-          .agg(first(col("__doc")).as("__doc"), sum(col("__rrf")).as("__score"))
-          .select(docCols.map(c => col("__doc").getField(c).as(c)) :+
-            col("__score"): _*)
-          .orderBy(col("__score").desc, col("_id"))
-      case "$score" =>
-        // Mongo 8.2: custom scoring — evaluates `score` per document into
-        // the hidden __score column ({"$meta": "score"} reads it), with
-        // optional per-stream normalization. minMaxScaler's stats are a
-        // single-row aggregate cross-joined back (broadcast by
-        // construction), never a window — scale-safe on an unbounded
-        // stream.
-        val e = MongoExpr.compile(spec \ "score").cast(DoubleType)
-        val scored = df.withColumn("__score", e)
-        (spec \ "normalization") match {
-          case JNothing | JString("none") => scored
-          case JString("sigmoid") => scored.withColumn("__score",
-            lit(1.0) / (lit(1.0) + exp(-col("__score"))))
-          case JString("minMaxScaler") =>
-            val stats = scored.agg(min(col("__score")).as("__mn"),
-              max(col("__score")).as("__mx"))
-            scored.crossJoin(broadcast(stats)).withColumn("__score",
-              when(col("__mx") === col("__mn"), lit(1.0))
-                .otherwise((col("__score") - col("__mn")) /
-                  (col("__mx") - col("__mn"))))
-              .drop("__mn", "__mx")
-          case other => throw new IllegalArgumentException(
-            s"$$score normalization: $other")
-        }
-      case "$scoreFusion" =>
-        // Mongo 8.1 hybrid search, score flavor: each input pipeline must
-        // PRODUCE a score ($score / $vectorSearch / $search); scores are
-        // normalized per pipeline (input.normalization), weighted, and
-        // combined as sum/nPipelines — a document absent from a pipeline
-        // contributes 0 from it (same absent rule as $rankFusion's RRF).
-        // No rank window is involved, so unlike $rankFusion the inputs
-        // need no boundedness: normalization stats are single-row
-        // broadcast aggregates.
-        val JObject(pipes) = ((spec \ "input" \ "pipelines"): @unchecked)
-        val norm = (spec \ "input" \ "normalization") match {
-          case JString(s) => s
-          case JNothing   => "none"
-          case other => throw new IllegalArgumentException(
-            s"$$scoreFusion normalization: $other")
-        }
-        val weights: Map[String, Double] = spec \ "combination" \ "weights" match {
-          case JObject(ws) => ws.map { case (nm, v) => nm -> (v match {
-            case JInt(i) => i.toDouble; case JLong(l) => l.toDouble
-            case JDouble(d) => d; case _ => 1.0 }) }.toMap
-          case _ => Map.empty
-        }
-        require(df.columns.contains("_id"), "$scoreFusion fuses on _id")
-        val docCols = df.columns.toSeq
-        val allowed = Set("$match", "$sort", "$limit", "$skip", "$sample",
-          "$vectorSearch", "$search", "$score")
-        val nPipes = pipes.size
-        val contribs = pipes.map { case (pname, pstages) =>
-          val JArray(stages) = (pstages: @unchecked)
-          val names = stages.collect { case JObject(fs) => fs.head._1 }
-          val bad = names.filterNot(allowed)
-          if (bad.nonEmpty) throw new IllegalArgumentException(
-            s"$$scoreFusion pipeline '$pname': only selection/scoring " +
-              s"stages (${allowed.mkString(" ")}) are allowed, got " +
-              bad.mkString(" "))
-          val out = run(df, pstages)
-          val scoreCol =
-            if (out.columns.contains("__score")) col("__score")
-            else if (out.columns.contains("__vsScore")) col("__vsScore")
-            else if (out.columns.contains("__searchScore")) col("__searchScore")
-            else throw new IllegalArgumentException(
-              s"$$scoreFusion pipeline '$pname' must produce a score: " +
-                "include $score, $vectorSearch or $search")
-          val scored0 = out.withColumn("__s", scoreCol.cast(DoubleType))
-          val normalized = norm match {
-            case "none" => scored0
-            case "sigmoid" => scored0.withColumn("__s",
-              lit(1.0) / (lit(1.0) + exp(-col("__s"))))
-            case "minMaxScaler" =>
-              val stats = scored0.agg(min(col("__s")).as("__mn"),
-                max(col("__s")).as("__mx"))
-              scored0.crossJoin(broadcast(stats)).withColumn("__s",
-                when(col("__mx") === col("__mn"), lit(1.0))
-                  .otherwise((col("__s") - col("__mn")) /
-                    (col("__mx") - col("__mn"))))
-                .drop("__mn", "__mx")
-            case other => throw new IllegalArgumentException(
-              s"$$scoreFusion normalization: $other")
-          }
-          val w = weights.getOrElse(pname, 1d)
-          normalized.select(struct(docCols.map(col).toIndexedSeq: _*).as("__doc"),
-            (lit(w) * col("__s")).as("__ws"))
-        }
-        contribs.reduce(_ unionByName _)
-          .groupBy(col("__doc").getField("_id").as("__fid"))
-          .agg(first(col("__doc")).as("__doc"),
-            (sum(col("__ws")) / lit(nPipes.toDouble)).as("__score"))
-          .select(docCols.map(c => col("__doc").getField(c).as(c)) :+
-            col("__score"): _*)
-          .orderBy(col("__score").desc, col("_id"))
       case "$facet" => // each sub-pipeline folds to ONE array column; the
         // single-row facet frames cross-join into one document
         val JObject(facets) = (spec: @unchecked)
@@ -353,7 +182,69 @@ final class Pipeline(
       case "$trace" | "$backTrace" => df // observability no-ops in batch
       case ext if extensions.contains(ext) => extensions(ext)(df, spec)
       case _ => df // unrecognized stages are silently ignored (Pipeline.java:265)
+      }
     }
+  }
+
+  /** Mongo 8.1 hybrid search: each input pipeline is a SELECTION pipeline
+    * over the same stream; its bounded output is ranked and the ranked lists
+    * fuse by reciprocal rank (constant 60, like Mongo) on _id. The fused
+    * score lands in the hidden __score column, surfaced via
+    * {"$meta": "score"}. */
+  private def rankFusion(df: DataFrame, f: Fusion): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    require(df.columns.contains("_id"), "$rankFusion fuses on _id")
+    val docCols = df.columns.toSeq
+    val contribs = f.inputs.map { case (pname, stages) =>
+      val out = run(df, stages)
+      // rank order: the trailing $sort's keys, else the vector score
+      val sortCols: Seq[Column] = stages.reverse.collectFirst {
+        case Stage(_, _, _, _, Sort(keys)) => keys.map { case (k, asc) =>
+          if (asc) Stages.sortKeyCol(out, k).asc else Stages.sortKeyCol(out, k).desc }
+      }.getOrElse {
+        if (stages.exists(_.name == "$vectorSearch")) Seq(col("__vsScore").desc)
+        else Seq(col("__searchScore").desc)
+      }
+      val rank = row_number().over(
+        Window.orderBy(sortCols :+ col("_id").asc: _*))
+      out.select(struct(docCols.map(col): _*).as("__doc"), rank.as("__rank"))
+        .select(col("__doc"),
+          (lit(f.weights.getOrElse(pname, 1d)) / (lit(60) + col("__rank"))).as("__rrf"))
+    }
+    contribs.reduce(_ unionByName _)
+      .groupBy(col("__doc").getField("_id").as("__fid"))
+      .agg(first(col("__doc")).as("__doc"), sum(col("__rrf")).as("__score"))
+      .select(docCols.map(c => col("__doc").getField(c).as(c)) :+
+        col("__score"): _*)
+      .orderBy(col("__score").desc, col("_id"))
+  }
+
+  /** Mongo 8.1 hybrid search, score flavor: each input pipeline must PRODUCE
+    * a score ($score / $vectorSearch / $search); scores are normalized per
+    * pipeline (input.normalization), weighted, and combined as
+    * sum/nPipelines — a document absent from a pipeline contributes 0 from
+    * it (same absent rule as $rankFusion's RRF). No rank window is involved,
+    * so unlike $rankFusion the inputs need no boundedness: normalization
+    * stats are single-row broadcast aggregates. */
+  private def scoreFusion(df: DataFrame, f: Fusion): DataFrame = {
+    require(df.columns.contains("_id"), "$scoreFusion fuses on _id")
+    val docCols = df.columns.toSeq
+    val contribs = f.inputs.map { case (pname, stages) =>
+      val out = run(df, stages)
+      val scoreCol = Seq("__score", "__vsScore", "__searchScore")
+        .find(out.columns.contains).map(col).get
+      val normalized = Stages.normalizeScore(
+        out.withColumn("__s", scoreCol.cast(DoubleType)), "__s", f.normalization)
+      normalized.select(struct(docCols.map(col).toIndexedSeq: _*).as("__doc"),
+        (lit(f.weights.getOrElse(pname, 1d)) * col("__s")).as("__ws"))
+    }
+    contribs.reduce(_ unionByName _)
+      .groupBy(col("__doc").getField("_id").as("__fid"))
+      .agg(first(col("__doc")).as("__doc"),
+        (sum(col("__ws")) / lit(f.inputs.size.toDouble)).as("__score"))
+      .select(docCols.map(c => col("__doc").getField(c).as(c)) :+
+        col("__score"): _*)
+      .orderBy(col("__score").desc, col("_id"))
   }
 }
 
@@ -399,14 +290,25 @@ private[graft] object Stages {
       typeOf = p => resolveType(docSchema, p))
   }
 
+  /** Score normalization shared by `$score` and `$scoreFusion`: none /
+    * sigmoid / minMaxScaler. minMaxScaler's stats are a single-row aggregate
+    * cross-joined back (broadcast by construction), never a window —
+    * scale-safe on an unbounded stream. */
+  def normalizeScore(df: DataFrame, c: String, norm: String): DataFrame = norm match {
+    case "none" => df
+    case "sigmoid" => df.withColumn(c, lit(1.0) / (lit(1.0) + exp(-col(c))))
+    case "minMaxScaler" =>
+      val stats = df.agg(min(col(c)).as("__mn"), max(col(c)).as("__mx"))
+      df.crossJoin(broadcast(stats)).withColumn(c,
+        when(col("__mx") === col("__mn"), lit(1.0))
+          .otherwise((col(c) - col("__mn")) / (col("__mx") - col("__mn"))))
+        .drop("__mn", "__mx")
+    case other => throw new IllegalArgumentException(s"score normalization: $other")
+  }
+
   private def str(v: JValue): String = v match {
     case JString(s) => s
     case other      => throw new IllegalArgumentException(s"expected string: $other")
-  }
-
-  private def bool(v: JValue, default: Boolean): Boolean = v match {
-    case JBool(b) => b
-    case _        => default
   }
 
   // ---- $project -----------------------------------------------------------
@@ -630,16 +532,8 @@ private[graft] object Stages {
 
   /** `posexplode`(-`_outer` for preserveNullAndEmptyArrays) + put the element
     * back at the path (Unwind.java:43-140). */
-  def unwind(df: DataFrame, spec: JValue): DataFrame = {
-    val (path, includeIndex, preserve, newIds) = spec match {
-      case JString(p) => (p.stripPrefix("$"), None, false, false)
-      case o: JObject =>
-        (str(o \ "path").stripPrefix("$"),
-          (o \ "includeArrayIndex") match { case JString(s) => Some(s); case _ => None },
-          bool(o \ "preserveNullAndEmptyArrays", default = false),
-          bool(o \ "newIds", default = false))
-      case other => throw new IllegalArgumentException(s"$$unwind: $other")
-    }
+  def unwind(df: DataFrame, u: Unwind): DataFrame = {
+    val Unwind(path, includeIndex, preserve, newIds) = u
     val parts = path.split('.').toList
     // $unwind of a path the schema does not have (e.g. after $unset):
     // Mongo emits nothing per doc — preserve keeps the docs unchanged,
@@ -690,122 +584,87 @@ private[graft] object Stages {
         element_at(l, 1), (acc, x) => map_concat(acc, x)))
   }
 
-  def accumulator(op: String, spec: JValue)(implicit ctx: ExprCtx): Column = op match {
+  def accumulator(a: Acc)(implicit ctx: ExprCtx): Column = {
+    def in = cexpr(a.input)
+    a.op match {
     case "$sum"   => // all-null group -> 0, like Mongo (not SQL null)
-      coalesce(sum(cexpr(spec)), lit(0))
-    case "$avg"   => avg(cexpr(spec))
-    case "$count" =>
-      require(spec == JObject(Nil), "$count accumulator takes {}") // Group.java:209-217
-      count(lit(1))
-    case "$max"      => max(cexpr(spec))
-    case "$min"      => min(cexpr(spec))
-    case "$push"     => collect_list(cexpr(spec))
-    case "$addToSet" => array_sort(collect_set(cexpr(spec))) // sorted (Group.java:130-149)
-    case "$last"     => last(cexpr(spec))
-    case "$stdDevPop" => stddev_pop(cexpr(spec)) // the documented σ, not the
+      coalesce(sum(in), lit(0))
+    case "$avg"   => avg(in)
+    case "$count" => count(lit(1)) // Group.java:209-217
+    case "$max"      => max(in)
+    case "$min"      => min(in)
+    case "$push"     => collect_list(in)
+    case "$addToSet" => array_sort(collect_set(in)) // sorted (Group.java:130-149)
+    case "$last"     => last(in)
+    case "$stdDevPop" => stddev_pop(in) // the documented σ, not the
       // reference's emit-the-count quirk (Group.java:451-453) — see SURVEY §2.4
-    case "$mergeObjects" => mergeObjectsAgg(cexpr(spec))
+    case "$mergeObjects" => mergeObjectsAgg(in)
     // --- beyond the reference's 10: the modern-MQL accumulators -------------
-    case "$first" => first(cexpr(spec))
-    case "$stdDevSamp" => stddev_samp(cexpr(spec))
-    case "$median" => // {input, method} or bare expr; exact linear interp
-      percentile(cexpr(spec match {
-        case JObject(fs) if fs.exists(_._1 == "input") =>
-          fs.collectFirst { case ("input", v) => v }.get
-        case v => v
-      }), lit(0.5))
-    case "$percentile" => // {input, p: [..]} -> array<double> in p order
-      val JObject(fs) = (spec: @unchecked)
-      val input = cexpr(fs.collectFirst { case ("input", v) => v }
-        .getOrElse(throw new IllegalArgumentException("$percentile needs input")))
-      val ps = fs.collectFirst { case ("p", JArray(l)) => l }
-        .getOrElse(throw new IllegalArgumentException("$percentile needs p"))
-        .map {
-          case JDouble(d) => lit(d)
-          case JInt(i)    => lit(i.toDouble)
-          case other => throw new IllegalArgumentException(s"$$percentile p: $other")
-        }
-      percentile(input, array(ps: _*))
+    case "$first" => first(in)
+    case "$stdDevSamp" => stddev_samp(in)
+    // {input, method} or bare expr; exact linear interp. $percentile:
+    // {input, p: [..]} -> array<double> in p order
+    case "$median" => percentile(in, lit(0.5))
+    case "$percentile" => percentile(in, array(a.ps.map(lit): _*))
     // the group-side N-family rides graft.functions.BoundedTopK: the
     // collect_list formulation buffered the WHOLE group per key (unbounded
     // memory on a billion-row group); the bounded aggregate keeps at most
     // n rows per partial AND prunes map-side before the shuffle
     case "$maxN" | "$minN" => // n largest/smallest, Mongo's output ordering
-      val JObject(fs) = (spec: @unchecked)
-      val input = cexpr(fs.collectFirst { case ("input", v) => v }
-        .getOrElse(throw new IllegalArgumentException(s"$op needs input")))
-      val n = fs.collectFirst { case ("n", JInt(i)) => i.toInt }
-        .getOrElse(throw new IllegalArgumentException(s"$op needs a literal n"))
+      val input = in
       val packed = when(input.isNotNull, // nulls skipped, Mongo's rule
         struct(input.as("__k0"), input.as("__out")))
       transform(graft.functions.BoundedTopK.sortedTopK(packed,
-        Seq(op == "$minN"), n), _.getField("__out"))
+        Seq(a.op == "$minN"), a.n), _.getField("__out"))
     case "$firstN" | "$lastN" => // first/last n in encounter order (same
       // no-total-order caveat as $first/$last without a preceding $sort).
       // Mongo does NOT filter nulls here (unlike $minN/$maxN) — missing and
       // null inputs occupy their position as null
-      val JObject(fs) = (spec: @unchecked)
-      val input = cexpr(fs.collectFirst { case ("input", v) => v }
-        .getOrElse(throw new IllegalArgumentException(s"$op needs input")))
-      val n = fs.collectFirst { case ("n", JInt(i)) => i.toInt }
-        .getOrElse(throw new IllegalArgumentException(s"$op needs a literal n"))
-      val packed = struct(input.as("__out"))
-      transform(if (op == "$firstN")
-        graft.functions.BoundedTopK.firstN(packed, n)
-      else graft.functions.BoundedTopK.lastN(packed, n), _.getField("__out"))
-    case "$top" | "$bottom" | "$topN" | "$bottomN" =>
-      // {output, sortBy: {f: 1|-1}, n?} — the group's best docs under the
-      // null-safe Mongo comparator (nulls first ascending); $bottom* =
-      // flipped directions + reversed readout
-      val JObject(fs) = (spec: @unchecked)
-      val output = cexpr(fs.collectFirst { case ("output", v) => v }
-        .getOrElse(throw new IllegalArgumentException(s"$op needs output")))
-      val JObject(sortKeys) = (fs.collectFirst { case ("sortBy", v) => v }
-        .getOrElse(throw new IllegalArgumentException(s"$op needs sortBy")): @unchecked)
-      val nOpt = fs.collectFirst { case ("n", JInt(i)) => i.toInt }
-      if ((op == "$topN" || op == "$bottomN") && nOpt.isEmpty)
-        throw new IllegalArgumentException(s"$op needs a literal n")
-      val dirs = sortKeys.map { case (_, dir) => dir match {
-        case JInt(v)    => v >= 0
-        case JLong(v)   => v >= 0
-        case JDouble(d) => d >= 0
-        case _          => true
-      }}
-      val packed = struct((sortKeys.zipWithIndex.map { case ((f, _), i) =>
-        cexpr(JString("$" + f)).as(s"__k$i") } :+ output.as("__out")): _*)
-      def keep(ds: Seq[Boolean], k: Int) =
-        graft.functions.BoundedTopK.sortedTopK(packed, ds, k)
-      op match {
-        case "$top"    => element_at(keep(dirs, 1), 1).getField("__out")
-        case "$bottom" => element_at(keep(dirs.map(!_), 1), 1).getField("__out")
-        case "$topN"   => transform(keep(dirs, nOpt.get), _.getField("__out"))
-        case _ => transform(reverse(keep(dirs.map(!_), nOpt.get)),
-          _.getField("__out"))
-      }
-    case other => throw new IllegalArgumentException(s"unsupported accumulator $other")
+      val packed = struct(in.as("__out"))
+      transform(if (a.op == "$firstN")
+        graft.functions.BoundedTopK.firstN(packed, a.n)
+      else graft.functions.BoundedTopK.lastN(packed, a.n), _.getField("__out"))
+    case _ => // $top $bottom $topN $bottomN: {output, sortBy, n?} — the
+      // group's best docs under the null-safe Mongo comparator (nulls first
+      // ascending); $bottom* = flipped directions + reversed readout
+      topFamily(a.op, a.sortBy, in, a.n, (p, ds, k) =>
+        graft.functions.BoundedTopK.sortedTopK(p, ds, k))
+    }
   }
 
-  def group(df: DataFrame, spec: JValue)(implicit ctx: ExprCtx): DataFrame = {
-    val JObject(fields) = (spec: @unchecked)
-    val idSpec = fields.find(_._1 == "_id").map(_._2)
-      .getOrElse(throw new IllegalArgumentException("$group needs _id"))
-    val accs: List[(String, Column)] = fields.collect {
-      case (name, JObject((accOp, accSpec) :: Nil))
-          if name != "_id" && name != "_collection" =>
-        // $mergeObjects over typed struct docs: shallow overlay in arrival
-        // order ≡ per-field latest non-null (null/missing fields don't
-        // overwrite — Group.java:291-304); probe the expression's type
-        name -> (if (accOp == "$mergeObjects") {
-          val c = cexpr(accSpec)
-          df.select(c).schema.head.dataType match {
-            case st: StructType =>
-              struct(st.fieldNames.map(f =>
-                last(c.getField(f), ignoreNulls = true).as(f)).toIndexedSeq: _*)
-            case _ => accumulator(accOp, accSpec)
-          }
-        } else accumulator(accOp, accSpec))
+  /** `$top`/`$bottom`/`$topN`/`$bottomN` over `keep` (a group aggregate or
+    * its windowed form): pack (sort keys…, output), keep the best `n`. */
+  def topFamily(op: String, sortBy: List[(String, Boolean)], output: Column,
+      n: Int, keep0: (Column, Seq[Boolean], Int) => Column)
+      (implicit ctx: ExprCtx): Column = {
+    val dirs = sortBy.map(_._2)
+    val packed = struct((sortBy.zipWithIndex.map { case ((f, _), i) =>
+      cexpr(JString("$" + f)).as(s"__k$i") } :+ output.as("__out")): _*)
+    def keep(ds: Seq[Boolean], k: Int) = keep0(packed, ds, k)
+    op match {
+      case "$top"    => element_at(keep(dirs, 1), 1).getField("__out")
+      case "$bottom" => element_at(keep(dirs.map(!_), 1), 1).getField("__out")
+      case "$topN"   => transform(keep(dirs, n), _.getField("__out"))
+      case _ => transform(reverse(keep(dirs.map(!_), n)), _.getField("__out"))
     }
-    require(accs.nonEmpty, "$group needs at least one accumulator")
+  }
+
+  def group(df: DataFrame, g: Group)(implicit ctx: ExprCtx): DataFrame = {
+    val idSpec = g.id
+    val accs: List[(String, Column)] = g.accs.map { a =>
+      // $mergeObjects over typed struct docs: shallow overlay in arrival
+      // order ≡ per-field latest non-null (null/missing fields don't
+      // overwrite — Group.java:291-304); probe the expression's type
+      a.field -> (if (a.op == "$mergeObjects") {
+        val c = cexpr(a.input)
+        df.select(c).schema.head.dataType match {
+          case st: StructType =>
+            struct(st.fieldNames.map(f =>
+              last(c.getField(f), ignoreNulls = true).as(f)).toIndexedSeq: _*)
+          case _ => accumulator(a)
+        }
+      } else accumulator(a))
+    }
     val aggCols = accs.map { case (n, c) => c.as(n) }
     if (isLiteralId(idSpec))
       // literal key = single global bucket, emitted as _id: null
@@ -815,7 +674,11 @@ private[graft] object Stages {
         .filter(col("__n") > 0)
         .select((lit(null).cast(StringType).as("_id") :: accs.map(a => col(a._1))): _*)
     else {
-      val grouped = df.groupBy(cexpr(idSpec).as("_id")).agg(aggCols.head, aggCols.tail: _*)
+      // an accumulator-less $group is MongoDB's distinct-keys form
+      val keyed = df.groupBy(cexpr(idSpec).as("_id"))
+      val grouped =
+        if (aggCols.isEmpty) keyed.agg(count(lit(1)).as("__n")).drop("__n")
+        else keyed.agg(aggCols.head, aggCols.tail: _*)
       // output key = stringified group key (Group.java:430) — only in the
       // keyed message model
       if (df.columns.contains("key")) grouped.withColumn("key", col("_id").cast(StringType))
@@ -823,41 +686,10 @@ private[graft] object Stages {
     }
   }
 
-  /** `$bucket` → `$group` with a `$switch` key over boundary pairs
-    * (Bucket.java:74-115). */
-  def bucketToGroup(spec: JValue): JValue = {
-    val groupBy = spec \ "groupBy"
-    val JArray(bounds) = ((spec \ "boundaries"): @unchecked)
-    require(bounds.size >= 2, "$bucket needs >= 2 boundaries")
-    val ordered = bounds.map {
-      case JInt(i) => BigDecimal(i); case JLong(l) => BigDecimal(l)
-      case JDouble(d) => BigDecimal(d); case JDecimal(d) => d
-      case other => throw new IllegalArgumentException(s"bad boundary $other")
-    }
-    require(ordered == ordered.sorted && ordered.distinct == ordered,
-      "$bucket boundaries must be strictly ascending") // Bucket.java:69-72
-    val branches = bounds.sliding(2).collect { case List(lo, hi) =>
-      JObject(List(
-        "case" -> JObject(List("$and" -> JArray(List(
-          JObject(List("$gte" -> JArray(List(groupBy, lo)))),
-          JObject(List("$lt" -> JArray(List(groupBy, hi)))))))),
-        "then" -> lo))
-    }.toList
-    val default = spec \ "default"
-    val switch = JObject(List("$switch" -> JObject(List(
-      "branches" -> JArray(branches)) ++
-      (default match { case JNothing => Nil; case d => List("default" -> d) }))))
-    val output = spec \ "output" match {
-      case JObject(fs) => fs
-      case _           => List("count" -> JObject(List("$sum" -> JInt(1))))
-    }
-    JObject(("_id" -> switch) :: output)
-  }
-
   /** `$count` stage: → `$group {_id:null, f:{$sum:1}}` minus `_id`
     * (Count.java:28-41). */
-  def countStage(df: DataFrame, spec: JValue): DataFrame =
-    df.groupBy().agg(count(lit(1)).as(str(spec))).filter(col(str(spec)) > 0)
+  def countStage(df: DataFrame, field: String): DataFrame =
+    df.groupBy().agg(count(lit(1)).as(field)).filter(col(field) > 0)
 
   /** `$documents` (MQL db.aggregate() entry stage): a literal array of
     * documents becomes the stream. Schema is inferred from the rendered
@@ -898,13 +730,12 @@ private[graft] object Stages {
       case JNothing    => List("count" -> JObject(List("$sum" -> JInt(1))))
       case other => throw new IllegalArgumentException(s"$$bucketAuto output: $other")
     }
+    // validated before the ranking runs its jobs
+    val aggs = StageSpec.accumulators(outputs)
+      .map(a => accumulator(a)(ctxFor(df)).as(a.field))
     val ranked = graft.operators.GlobalRank
       .withRank(df.withColumn("__v", gb), "__v", "__rk", "__n")
       .withColumn("__b", expr(s"((__rk - 1) * $b) div __n"))
-    val aggs = outputs.map { case (name, o) =>
-      val JObject(List((op, aspec))) = (o: @unchecked)
-      accumulator(op, aspec)(ctxFor(df)).as(name)
-    }
     val grouped = ranked.groupBy(col("__b"))
       .agg(min(col("__v")).as("__min"), (max(col("__v")).as("__max") +: aggs): _*)
     grouped
@@ -1233,19 +1064,13 @@ private[graft] object Stages {
     * the huge stream side is never re-grouped. Pipeline/let form and
     * array-valued local fields: join + regroup by a synthetic row id.
     * (Lookup.java:59-201.) */
-  def lookup(df: DataFrame, spec: JValue, catalog: String => DataFrame,
-      remote: (String, String, String) => DataFrame = (u, _, _) =>
-        throw new IllegalArgumentException(s"no remote catalog for $u"))
+  def lookup(df: DataFrame, l: Lookup, catalog: String => DataFrame,
+      remote: (String, String, String) => DataFrame)
       (implicit ctx: ExprCtx): DataFrame = {
     // remote form (Lookup.java:74-78): connectionString + database switch
     // the `from` resolution to a second store; all join forms are identical
-    val from = (spec \ "connectionString", spec \ "database") match {
-      case (JString(uri), JString(dbn)) => remote(uri, dbn, str(spec \ "from"))
-      case _                            => catalog(str(spec \ "from"))
-    }
-    val as = str(spec \ "as")
-    val inner = bool(spec \ "inner", default = false)
-    val unwindFlag = bool(spec \ "unwind", default = false)
+    val from = l.remote.fold(catalog(l.from)) { case (uri, dbn) => remote(uri, dbn, l.from) }
+    val (as, inner, unwindFlag) = (l.as, l.inner, l.unwind)
     val fromDoc = from.select(struct(from.columns.map(col).toIndexedSeq: _*).as("__as"))
 
     def regroupJoin(cond: Column, res: Column,
@@ -1260,8 +1085,8 @@ private[graft] object Stages {
         .drop("__rid")
     }
 
-    (spec \ "localField", spec \ "foreignField") match {
-      case (JString(local), JString(foreign)) =>
+    l.local match {
+      case Some((local, foreign)) =>
         val localCol = ctx.field(local)
         val localIsArray =
           df.select(localCol).schema.head.dataType.isInstanceOf[ArrayType]
@@ -1299,67 +1124,27 @@ private[graft] object Stages {
         //     matched array (array_sort comparator / slice / per-element
         //     struct projection) — no extra shuffle, the per-message top-k
         //     pattern.
-        val letVars: Map[String, Column] = spec \ "let" match {
-          case JObject(vs) => vs.map { case (n, e) => n -> cexpr(e) }.toMap
-          case _           => Map.empty
-        }
-        val JArray(subStages) = ((spec \ "pipeline"): @unchecked)
-        // structural $$var detection: a let-variable reference is a JSON
-        // STRING VALUE of the form "$$name" or "$$name.path" — a substring
-        // scan over rendered JSON would misfire on "$$x" inside a plain
-        // string literal or on a var name that prefixes another.
-        def usesVars(st: JValue): Boolean = {
-          def refs(v: JValue): Boolean = v match {
-            case JString(s) if s.startsWith("$$") =>
-              letVars.contains(s.drop(2).takeWhile(_ != '.'))
-            case JObject(fields) => fields.exists { case (_, fv) => refs(fv) }
-            case JArray(items)   => items.exists(refs)
-            case _               => false
-          }
-          refs(st)
-        }
-        val (prefixStages, rest) = subStages.span(st => !usesVars(st))
+        val letVars: Map[String, Column] = l.let.map { case (n, e) => n -> cexpr(e) }.toMap
+        // StageSpec split the sub-pipeline at the first let-variable
+        // reference (structural "$$name" detection, never a substring scan)
+        val (prefixStages, trailing) = (l.prefix, l.trailing)
         val effFrom =
           if (prefixStages.isEmpty) from
           else new Pipeline(catalog = catalog).run(from, JArray(prefixStages))
         val fromDoc2 = effFrom.select(
           struct(effFrom.columns.map(col).toIndexedSeq: _*).as("__as"))
         val fromStruct2 = fromDoc2.schema("__as").dataType.asInstanceOf[StructType]
-        val (matchSpec, trailing) = rest match {
-          case JObject(List(("$match", m))) :: t => (Some(m), t)
-          case Nil                               => (None, Nil)
-          case other :: _ => throw new IllegalArgumentException(
-            "$lookup pipeline: the first let-variable-referencing stage must " +
-              s"be a $$match, got ${JsonMethods.compact(JsonMethods.render(other))}")
-        }
-        // Mongo preserves sub-pipeline output order in `as`; our prefix runs
-        // once and the matches are collect_list'd (unordered), so a $sort in
-        // the prefix would be silently lost unless a trailing $sort re-orders.
-        def isSort(st: JValue) = st match {
-          case JObject(List(("$sort", _))) => true
-          case _                           => false
-        }
-        if (prefixStages.exists(isSort) && !trailing.exists(isSort))
-          throw new IllegalArgumentException(
-            "$lookup pipeline: a $sort before the correlated $match cannot be " +
-              "preserved in the `as` array; add a trailing $sort after it")
         val subCtx = ExprCtx(
           field = p => p.split('.').foldLeft(col("__as"))(_ getField _),
           vars = letVars)
         // no correlated $match -> every message gets the whole (prefixed)
         // collection, like Mongo running the sub-pipeline as-is
-        val cond = matchSpec.map(m => MongoMatch.compile(m)(subCtx))
+        val cond = l.correlated.map(m => MongoMatch.compile(m)(subCtx))
           .getOrElse(lit(true))
 
-        def sortCmp(keys: List[(String, JValue)], l: Column, r: Column): Column =
-          keys.foldRight(lit(0)) { case ((f, dir), tie) =>
-            val asc = dir match {
-              case JInt(i)    => i >= 0
-              case JLong(v)   => v >= 0
-              case JDouble(d) => d >= 0
-              case _          => true
-            }
-            val (lf, rf) = (l.getField(f), r.getField(f))
+        def sortCmp(keys: List[(String, Boolean)], a: Column, b: Column): Column =
+          keys.foldRight(lit(0)) { case ((f, asc), tie) =>
+            val (lf, rf) = (a.getField(f), b.getField(f))
             when(lf < rf, lit(if (asc) -1 else 1))
               .when(lf > rf, lit(if (asc) 1 else -1))
               .otherwise(tie)
@@ -1367,39 +1152,21 @@ private[graft] object Stages {
         /** Trailing sub-stages over the per-message matched array. */
         def applyTrailing(arr0: Column): Column =
           trailing.foldLeft(arr0) { (arr, st) =>
-            st match {
-              case JObject(List(("$project", p))) =>
-                transform(arr, d => projectDoc(d, fromStruct2, p))
-              case JObject(List(("$sort", JObject(keys)))) =>
-                array_sort(arr, (l, r) => sortCmp(keys, l, r))
-              case JObject(List(("$limit", n))) =>
-                val lim = n match {
-                  case JInt(i)  => i.toInt
-                  case JLong(l) => l.toInt
-                  case other    => throw new IllegalArgumentException(s"$$limit: $other")
-                }
-                slice(arr, 1, lim)
-              case other => throw new IllegalArgumentException(
-                "$lookup trailing sub-stage must be $project/$sort/$limit: " +
-                  JsonMethods.compact(JsonMethods.render(other)))
+            st.args match {
+              case Sort(keys) => array_sort(arr, (a, b) => sortCmp(keys, a, b))
+              case Limit(n)   => slice(arr, 1, n)
+              case _          => transform(arr, d => projectDoc(d, fromStruct2, st.spec))
             }
           }
         // unwind mode emits rows, not arrays: a per-row $project applies
         // directly; trailing $sort/$limit need the ARRAY form first — build
         // the grouped array, apply trailing, then explode (explode drops
         // empty arrays, which is exactly unwind's inner-join semantics)
-        val unwindViaArray = unwindFlag && (trailing match {
-          case Nil                                  => false
-          case List(JObject(List(("$project", _)))) => false
-          case _                                    => true
-        })
+        val unwindViaArray = unwindFlag &&
+          (trailing.size > 1 || trailing.exists(_.name != "$project"))
         val unwindRows = unwindFlag && !unwindViaArray
-        def resDoc(doc: Column): Column = trailing match {
-          case Nil => doc
-          case List(JObject(List(("$project", p)))) => projectDoc(doc, fromStruct2, p)
-          case _ => throw new IllegalArgumentException(
-            "$lookup with unwind supports at most a trailing $project")
-        }
+        def resDoc(doc: Column): Column =
+          trailing.headOption.fold(doc)(p => projectDoc(doc, fromStruct2, p.spec))
 
         // `_rangeJoin: {field, width, lo, hi}` turns the theta join into a
         // bucketed equi-join: the right side lands in bucket
@@ -1408,7 +1175,7 @@ private[graft] object Stages {
         // shuffled-hash) instead of a BroadcastNestedLoopJoin — the scale
         // path for band predicates (docs/SCALING.md §3). The original $match
         // condition is still applied, so results are exact.
-        spec \ "_rangeJoin" match {
+        l.rangeJoin match {
           case rj: JObject =>
             val bField = str(rj \ "field")
             val width = (rj \ "width") match {
@@ -1512,23 +1279,10 @@ private[graft] object Stages {
     * Frames ending at unboundedFollowing are
     * rewritten onto the reversed sort order (growing frames, incremental)
     * so no window here is O(partition²). */
-  def setWindowFields(df: DataFrame, spec: JValue)(implicit ctx: ExprCtx): DataFrame = {
+  def setWindowFields(df: DataFrame, w: SetWindowFields)(implicit ctx: ExprCtx): DataFrame = {
     import org.apache.spark.sql.expressions.{Window, WindowSpec}
-    val partCols: Seq[Column] = spec \ "partitionBy" match {
-      case JNothing | JNull => Seq(lit(1))
-      case p                => Seq(cexpr(p))
-    }
-    val sortKeys: List[(String, Boolean)] = spec \ "sortBy" match {
-      case JObject(ks) => ks.map { case (f, d) =>
-        (f, d match {
-          case JInt(i)    => i >= 0
-          case JLong(l)   => l >= 0
-          case JDouble(x) => x >= 0
-          case _          => true
-        })
-      }
-      case _ => Nil
-    }
+    val partCols: Seq[Column] = Seq(w.partitionBy.fold(lit(1))(cexpr(_)))
+    val sortKeys = w.sortBy
     val ordered: WindowSpec = {
       val base = Window.partitionBy(partCols: _*)
       if (sortKeys.isEmpty) base
@@ -1548,16 +1302,6 @@ private[graft] object Stages {
       else base.orderBy(sortKeys.map { case (f, asc) =>
         if (asc) sortKeyCol(df, f).desc else sortKeyCol(df, f).asc }: _*)
     }
-    // Mongo time-unit factor in milliseconds (derivative/integral/range)
-    def unitMillis(u: String): Long = u match {
-      case "week"        => 7L * 24 * 3600 * 1000
-      case "day"         => 24L * 3600 * 1000
-      case "hour"        => 3600L * 1000
-      case "minute"      => 60L * 1000
-      case "second"      => 1000L
-      case "millisecond" => 1L
-      case other => throw new IllegalArgumentException(s"window unit: $other")
-    }
     val sortIsDate = sortKeys.headOption.exists { case (f, _) =>
       df.schema.find(_.name == f).exists(f0 =>
         f0.dataType == TimestampType || f0.dataType == DateType)
@@ -1566,49 +1310,20 @@ private[graft] object Stages {
       * date keys, the raw numeric for number keys ($derivative/$integral/
       * $linearFill/range frames — Mongo restricts all of them the same way). */
     def sortAxis(unit: Option[String]): Column = {
-      require(sortKeys.size == 1,
-        "$setWindowFields: this operator needs exactly one sortBy field")
       val f = col(sortKeys.head._1)
       if (sortIsDate) {
         val u = unit.getOrElse("millisecond")
-        unix_millis(f.cast(TimestampType)).cast(DoubleType) / lit(unitMillis(u).toDouble)
+        unix_millis(f.cast(TimestampType)).cast(DoubleType) /
+          lit(StageSpec.unitMillis(u).toDouble)
       } else {
         require(unit.isEmpty, "unit is only valid for a date sortBy field")
         f.cast(DoubleType)
       }
     }
-    val rankOps = Set("$rank", "$denseRank", "$documentNumber", "$shift")
-    val JObject(outs) = (spec \ "output": @unchecked)
-    outs.foldLeft(df) { case (acc, (name, out)) =>
-      val JObject(fields) = (out: @unchecked)
-      require(!name.contains("."),
-        "$setWindowFields: top-level output fields only")
-      val (op, opSpec) = fields.filterNot(_._1 == "window").head
-      def docBound(v: JValue, isLo: Boolean): Long = v match {
-        case JString("unbounded") =>
-          if (isLo) Window.unboundedPreceding else Window.unboundedFollowing
-        case JString("current") => Window.currentRow
-        case JInt(i)            => i.toLong
-        case other => throw new IllegalArgumentException(s"window bound: $other")
-      }
-      // documents frame bounds, when given (range frames handled separately)
-      val docFrame: Option[(Long, Long)] =
-        fields.collectFirst { case ("window", w) => w }.flatMap { w =>
-          w \ "documents" match {
-            case JArray(List(lo, hi)) =>
-              Some((docBound(lo, isLo = true), docBound(hi, isLo = false)))
-            case _ => None
-          }
-        }
-      val rangeFrame: Option[(Long, Long, Option[String])] =
-        fields.collectFirst { case ("window", w) => w }.flatMap { w =>
-          w \ "range" match {
-            case JArray(List(lo, hi)) =>
-              val u = w \ "unit" match { case JString(s) => Some(s); case _ => None }
-              Some((docBound(lo, isLo = true), docBound(hi, isLo = false), u))
-            case _ => None
-          }
-        }
+    w.outputs.foldLeft(df) { (acc, o) =>
+      val (name, op, docFrame, rangeFrame) = (o.field, o.op, o.frame.documents,
+        o.frame.range.map { case (lo, hi) => (lo, hi, o.frame.unit) })
+      def in = cexpr(o.input)
       // `reversed` marks a shrinking [lo, +unbounded) frame rewritten onto
       // the reversed sort order (see orderedRev); order-SENSITIVE ops must
       // then swap first<->last / reverse their collected lists
@@ -1627,64 +1342,49 @@ private[graft] object Stages {
             (base(!sortKeys.head._2)
               .rangeBetween(Window.unboundedPreceding, -lo), true)
           else (base(sortKeys.head._2).rangeBetween(lo, hi), false)
-        case (None, None) if rankOps(op) && sortKeys.nonEmpty => (ordered, false)
+        case (None, None) if (StageSpec.rankOps(op) || op == "$shift") &&
+            sortKeys.nonEmpty => (ordered, false)
         case (None, None) => // Mongo default: documents ["unbounded",
           // "unbounded"] — the whole partition, sorted or not
           (ordered.rowsBetween(Window.unboundedPreceding,
             Window.unboundedFollowing), false)
       }
-      if (rankOps(op) && op != "$shift") require(sortKeys.nonEmpty,
-        s"$op requires sortBy")
-      def covArgs: (Column, Column) = opSpec match {
-        case JArray(List(x, y)) => (cexpr(x), cexpr(y))
-        case other => throw new IllegalArgumentException(s"$op expects [x, y]: $other")
-      }
       val c = op match {
         case "$sum" => // empty frame -> 0, like Mongo (not SQL's null)
-          coalesce(sum(cexpr(opSpec)).over(framed), lit(0))
-        case "$avg"   => avg(cexpr(opSpec)).over(framed)
-        case "$min"   => min(cexpr(opSpec)).over(framed)
-        case "$max"   => max(cexpr(opSpec)).over(framed)
+          coalesce(sum(in).over(framed), lit(0))
+        case "$avg"   => avg(in).over(framed)
+        case "$min"   => min(in).over(framed)
+        case "$max"   => max(in).over(framed)
         case "$count" => count(lit(1)).over(framed)
         case "$push" =>
-          val c0 = collect_list(cexpr(opSpec)).over(framed)
+          val c0 = collect_list(in).over(framed)
           if (reversed) reverse(c0) else c0
-        case "$addToSet" => array_sort(collect_set(cexpr(opSpec)).over(framed))
+        case "$addToSet" => array_sort(collect_set(in).over(framed))
         case "$first" =>
-          if (reversed) last(cexpr(opSpec)).over(framed)
-          else first(cexpr(opSpec)).over(framed)
+          if (reversed) last(in).over(framed)
+          else first(in).over(framed)
         case "$last" =>
-          if (reversed) first(cexpr(opSpec)).over(framed)
-          else last(cexpr(opSpec)).over(framed)
-        case "$stdDevPop"  => stddev_pop(cexpr(opSpec)).over(framed)
-        case "$stdDevSamp" => stddev_samp(cexpr(opSpec)).over(framed)
+          if (reversed) first(in).over(framed)
+          else last(in).over(framed)
+        case "$stdDevPop"  => stddev_pop(in).over(framed)
+        case "$stdDevSamp" => stddev_samp(in).over(framed)
         case "$median" => // exact linear interpolation over the frame
-          percentile(cexpr(opSpec \ "input").cast(DoubleType), lit(0.5))
+          percentile(in.cast(DoubleType), lit(0.5))
             .over(framed)
         case "$percentile" =>
-          val ps = opSpec \ "p" match {
-            case JArray(l) => l.map {
-              case JDouble(d) => lit(d); case JInt(i) => lit(i.toDouble)
-              case other => throw new IllegalArgumentException(s"$$percentile p: $other")
-            }
-            case other => throw new IllegalArgumentException(s"$$percentile p: $other")
-          }
-          percentile(cexpr(opSpec \ "input").cast(DoubleType), array(ps: _*))
+          percentile(in.cast(DoubleType), array(o.ps.map(lit): _*))
             .over(framed)
-        case "$covariancePop" =>
-          val (x, y) = covArgs; covar_pop(x, y).over(framed)
-        case "$covarianceSamp" =>
-          val (x, y) = covArgs; covar_samp(x, y).over(framed)
+        case "$covariancePop"  => covar_pop(in, cexpr(o.y)).over(framed)
+        case "$covarianceSamp" => covar_samp(in, cexpr(o.y)).over(framed)
         case "$locf" => // last observation carried forward — takes no
           // window in Mongo; always the backward cumulative frame
-          last(cexpr(opSpec), ignoreNulls = true).over(
+          last(in, ignoreNulls = true).over(
             ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow))
         case "$linearFill" =>
           // interpolate nulls between the nearest non-null neighbors along
           // the sort axis; nulls before the first / after the last non-null
           // stay null (both neighbor aggregates come back null there)
-          require(sortKeys.nonEmpty, "$linearFill requires sortBy")
-          val v = cexpr(opSpec).cast(DoubleType)
+          val v = in.cast(DoubleType)
           val x = sortAxis(None)
           val back = ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)
           // the forward neighbor scan rides the REVERSED order as a growing
@@ -1700,10 +1400,8 @@ private[graft] object Stages {
         case "$derivative" =>
           // slope across the frame: Δinput / Δaxis (null when the frame
           // holds fewer than two distinct axis points, like Mongo)
-          require(sortKeys.nonEmpty, "$derivative requires sortBy")
-          val unit = opSpec \ "unit" match { case JString(s) => Some(s); case _ => None }
-          val v = cexpr(opSpec \ "input").cast(DoubleType)
-          val x = sortAxis(unit)
+          val v = in.cast(DoubleType)
+          val x = sortAxis(o.unit)
           // under a reversed frame the traversal order flips: the frame's
           // last row in sort order is the reversed frame's FIRST
           def edge(c: Column, atEnd: Boolean) =
@@ -1715,10 +1413,8 @@ private[graft] object Stages {
           // minus its entering edge: area(i) spans (i-1, i], so a frame
           // [lo, hi] integrates areas (lo+1)..hi — an unbounded lo keeps
           // unbounded (the partition-first area is null and drops out)
-          require(sortKeys.nonEmpty, "$integral requires sortBy")
-          val unit = opSpec \ "unit" match { case JString(s) => Some(s); case _ => None }
-          val v = cexpr(opSpec \ "input").cast(DoubleType)
-          val x = sortAxis(unit)
+          val v = in.cast(DoubleType)
+          val x = sortAxis(o.unit)
           val area = (x - lag(x, 1).over(ordered)) *
             (v + lag(v, 1).over(ordered)) / 2d
           if (rangeFrame.isDefined) {
@@ -1749,15 +1445,7 @@ private[graft] object Stages {
           // EMA forward (Mongo's rule). Incremental custom aggregate over
           // the growing frame — O(1) state per row, not a history fold
           // (Mongo forbids a window spec here, it is always cumulative).
-          require(sortKeys.nonEmpty, "$expMovingAvg requires sortBy")
-          val alpha: Double = (opSpec \ "alpha", opSpec \ "N") match {
-            case (JDouble(a), JNothing) => a
-            case (JNothing, JInt(n))    => 2d / (n.toDouble + 1d)
-            case (JNothing, JLong(n))   => 2d / (n.toDouble + 1d)
-            case other => throw new IllegalArgumentException(
-              s"$$expMovingAvg needs exactly one of N or alpha: $other")
-          }
-          graft.functions.EmaAgg.ema(cexpr(opSpec \ "input"), alpha).over(
+          graft.functions.EmaAgg.ema(in, o.alpha).over(
             ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow))
         // N-family window operators ride graft.functions.BoundedTopK — the
         // composable collect_list+array_sort form re-sorts the WHOLE
@@ -1765,24 +1453,15 @@ private[graft] object Stages {
         // a measured multi-minute stall at sf0.1); the bounded incremental
         // aggregate is O(log k) per row with at most k buffered rows
         case "$minN" | "$maxN" => // n smallest/largest over the frame
-          val JObject(fs) = (opSpec: @unchecked)
-          val input = cexpr(fs.collectFirst { case ("input", v) => v }
-            .getOrElse(throw new IllegalArgumentException(s"$op needs input")))
-          val n = fs.collectFirst { case ("n", JInt(i)) => i.toInt }
-            .getOrElse(throw new IllegalArgumentException(s"$op needs a literal n"))
+          val input = in
           // null inputs skipped (NULL packed row), Mongo's rule
           val packed = when(input.isNotNull,
             struct(input.as("__k0"), input.as("__out")))
           transform(graft.functions.BoundedTopK.sortedTopK(packed,
-            Seq(op == "$minN"), n).over(framed), _.getField("__out"))
+            Seq(op == "$minN"), o.n).over(framed), _.getField("__out"))
         case "$firstN" | "$lastN" => // first/last n in frame (sort) order;
           // nulls are NOT filtered (Mongo's rule — unlike $minN/$maxN)
-          val JObject(fs) = (opSpec: @unchecked)
-          val input = cexpr(fs.collectFirst { case ("input", v) => v }
-            .getOrElse(throw new IllegalArgumentException(s"$op needs input")))
-          val n = fs.collectFirst { case ("n", JInt(i)) => i.toInt }
-            .getOrElse(throw new IllegalArgumentException(s"$op needs a literal n"))
-          val packed = struct(input.as("__out"))
+          val (packed, n) = (struct(in.as("__out")), o.n)
           // a reversed (shrinking→reversed-order) frame flips arrival order:
           // firstN becomes lastN of the reversed stream, read back reversed
           val takeFirst = (op == "$firstN") != reversed
@@ -1794,52 +1473,21 @@ private[graft] object Stages {
         case "$top" | "$bottom" | "$topN" | "$bottomN" =>
           // {output, sortBy, n?} over the frame — same null-safe Mongo
           // comparator rule as the group accumulators, kept incrementally
-          val JObject(fs) = (opSpec: @unchecked)
-          val output = cexpr(fs.collectFirst { case ("output", v) => v }
-            .getOrElse(throw new IllegalArgumentException(s"$op needs output")))
-          val JObject(sortKeys2) = (fs.collectFirst { case ("sortBy", v) => v }
-            .getOrElse(throw new IllegalArgumentException(s"$op needs sortBy")): @unchecked)
-          val nOpt = fs.collectFirst { case ("n", JInt(i)) => i.toInt }
-          if ((op == "$topN" || op == "$bottomN") && nOpt.isEmpty)
-            throw new IllegalArgumentException(s"$op needs a literal n")
-          val dirs = sortKeys2.map { case (_, dir) => dir match {
-            case JInt(v)    => v >= 0
-            case JLong(v)   => v >= 0
-            case JDouble(d) => d >= 0
-            case _          => true
-          }}
-          val packed = struct((sortKeys2.zipWithIndex.map { case ((f, _), i) =>
-            cexpr(JString("$" + f)).as(s"__k$i") } :+ output.as("__out")): _*)
-          def keep(ds: Seq[Boolean], k: Int) =
-            graft.functions.BoundedTopK.sortedTopK(packed, ds, k).over(framed)
-          op match {
-            case "$top" => element_at(keep(dirs, 1), 1).getField("__out")
-            case "$bottom" => // best under flipped directions = sort-order last
-              element_at(keep(dirs.map(!_), 1), 1).getField("__out")
-            case "$topN" =>
-              transform(keep(dirs, nOpt.get), _.getField("__out"))
-            case _ => // bottomN: flipped keep, read back in ascending order
-              transform(reverse(keep(dirs.map(!_), nOpt.get)),
-                _.getField("__out"))
-          }
+          topFamily(op, o.sortBy, in, o.n, (p, ds, k) =>
+            graft.functions.BoundedTopK.sortedTopK(p, ds, k).over(framed))
         case "$rank"           => rank().over(ordered)
         case "$denseRank"      => dense_rank().over(ordered)
         case "$documentNumber" => row_number().over(ordered)
         case "$shift" =>
-          val outC = cexpr(opSpec \ "output")
-          val by = opSpec \ "by" match {
-            case JInt(i) => i.toInt
-            case JNothing => 1
-            case other => throw new IllegalArgumentException(s"$$shift by: $other")
-          }
+          val (outC, by) = (in, o.by)
           // default applies ONLY when the shifted-to position falls outside
           // the partition (Mongo) — Lead/Lag's native default argument has
           // exactly that semantics; a data null at an in-partition position
           // stays null (was: coalesce, which also filled data nulls)
-          opSpec \ "default" match {
-            case JNothing =>
+          o.default match {
+            case None =>
               (if (by >= 0) lead(outC, by) else lag(outC, -by)).over(ordered)
-            case d =>
+            case Some(d) =>
               import org.apache.spark.sql.catalyst.expressions.{Lag, Lead, Literal}
               import org.apache.spark.sql.graftops.ColumnBridge
               val in = ColumnBridge.expression(outC)
@@ -1848,8 +1496,6 @@ private[graft] object Stages {
                 if (by >= 0) Lead(in, Literal(by), dflt, false)
                 else Lag(in, Literal(-by), dflt, false)).over(ordered)
           }
-        case other =>
-          throw new IllegalArgumentException(s"$$setWindowFields operator $other")
       }
       acc.withColumn(name, c)
     }
@@ -1869,15 +1515,8 @@ private[graft] object Stages {
       col(f)
     else lit(null)
 
-  def sortStage(df: DataFrame, spec: JValue): DataFrame = {
-    val JObject(keys) = (spec: @unchecked)
-    df.orderBy(keys.map { case (f, dir) =>
-      val asc = dir match {
-        case JInt(i)    => i >= 0
-        case JLong(l)   => l >= 0
-        case JDouble(d) => d >= 0
-        case _          => true
-      }
+  def sortStage(df: DataFrame, keys: List[(String, Boolean)]): DataFrame = {
+    df.orderBy(keys.map { case (f, asc) =>
       val c = sortKeyCol(df, f)
       if (asc) c.asc else c.desc
     }: _*)
@@ -1896,45 +1535,25 @@ private[graft] object Stages {
     * pairs keeps only the gaps; the stubs union back with every other
     * column null. No driver-side loops, no cross join wider than
     * (partitions × grid). */
-  def densify(df: DataFrame, spec: JValue): DataFrame = {
-    val JString(fieldName) = ((spec \ "field"): @unchecked)
-    val partFields: List[String] = spec \ "partitionByFields" match {
-      case JArray(xs) => xs.map { case JString(s) => s
-        case other => throw new IllegalArgumentException(s"partitionByFields: $other") }
-      case JNothing => Nil
-      case other => throw new IllegalArgumentException(s"partitionByFields: $other")
-    }
-    val step = spec \ "range" \ "step" match {
-      case JInt(i) => i.toLong
-      case other => throw new IllegalArgumentException(s"$$densify integer step only: $other")
-    }
-    val unit: Option[String] = spec \ "range" \ "unit" match {
-      case JString(u) => Some(u)
-      case JNothing   => None
-      case other => throw new IllegalArgumentException(s"$$densify unit: $other")
-    }
+  def densify(df: DataFrame, d: Densify): DataFrame = {
+    val Densify(fieldName, partFields, step, unit, bounds, explicit) = d
     val stepCol = unit.fold(lit(step))(Stages.densifyInterval(_, step))
     val f = if (unit.isDefined) col(fieldName).cast(TimestampType)
             else col(fieldName).cast("long")
     val parts = partFields.map(col)
     def partKeys = if (partFields.isEmpty) df.select(lit(1).as("__one")).limit(1)
                    else df.select(parts: _*).distinct()
-    val (bounded, exclusiveHi) = spec \ "range" \ "bounds" match {
-      case JString("partition") =>
-        require(partFields.nonEmpty, "bounds: partition needs partitionByFields")
+    val (bounded, exclusiveHi) = (bounds, explicit) match {
+      case ("partition", _) =>
         (df.groupBy(parts: _*).agg(min(f).as("__lo"), max(f).as("__hi")), false)
-      case JString("full") =>
+      case (_, Some((lo, hi))) =>
+        // Mongo explicit bounds are [lo, hi): generate up to hi - 1 slot;
+        // dates arrive as epoch micros
+        def n(v: Long): Column = if (unit.isDefined) timestamp_micros(lit(v)) else lit(v)
+        (partKeys.withColumn("__lo", n(lo)).withColumn("__hi", n(hi)), true)
+      case _ => // full
         val g = df.agg(min(f).as("__lo"), max(f).as("__hi"))
         (partKeys.crossJoin(broadcast(g)), false)
-      case JArray(List(lo, hi)) =>
-        def n(v: JValue): Column = (v, unit) match {
-          case (JInt(i), None) => lit(i.toLong)
-          case (JString(s), Some(_)) => lit(java.time.Instant.parse(s))
-          case other => throw new IllegalArgumentException(s"bounds: $other")
-        }
-        // Mongo explicit bounds are [lo, hi): generate up to hi - 1 slot
-        (partKeys.withColumn("__lo", n(lo)).withColumn("__hi", n(hi)), true)
-      case other => throw new IllegalArgumentException(s"$$densify bounds: $other")
     }
     // exclusive hi: integers step on a unit grid so hi-1 is exact; dates are
     // millisecond-precision in Mongo so hi-1ms is the same strict bound
@@ -1977,43 +1596,23 @@ private[graft] object Stages {
     * observations ON THE SORT FIELD (Mongo's rule; requires a single
     * numeric sortBy key), via one backward + one forward window;
     * `value: <expr>` is a document-local `$ifNull`. */
-  def fill(df: DataFrame, spec: JValue)(implicit ctx: ExprCtx): DataFrame = {
+  def fill(df: DataFrame, fl: Fill)(implicit ctx: ExprCtx): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val JObject(outs) = ((spec \ "output"): @unchecked)
-    def method(v: JValue): Option[String] = v \ "method" match {
-      case JString(m) => Some(m); case _ => None
-    }
-    val (locf, rest0) = outs.partition(o => method(o._2).contains("locf"))
-    val (linear, rest) = rest0.partition(o => method(o._2).contains("linear"))
-    rest.foreach { case (f, v) =>
-      if ((v \ "value") == JNothing) throw new IllegalArgumentException(
-        s"$$fill $f: method must be locf or linear, or give value: <expr>")
-    }
     val afterLocf =
-      if (locf.isEmpty) df
-      else setWindowFields(df, JObject(List(
-        "partitionBy" -> (spec \ "partitionBy"),
-        "sortBy" -> (spec \ "sortBy"),
-        "output" -> JObject(locf.map { case (f, _) =>
-          f -> JObject(List("$locf" -> JString("$" + f))) }))))
-    val afterLinear = if (linear.isEmpty) afterLocf else {
-      val sortKeys = spec \ "sortBy" match {
-        case JObject(List((f, _))) => f
-        case other => throw new IllegalArgumentException(
-          s"$$fill linear needs exactly one sortBy field, got $other")
-      }
+      if (fl.locf.isEmpty) df
+      else setWindowFields(df, SetWindowFields(fl.partitionBy, fl.sortBy,
+        fl.locf.map(f => WinOut(f, "$locf", JString("$" + f), Frame()))))
+    val afterLinear = if (fl.linear.isEmpty) afterLocf else {
+      val sortKeys = fl.sortBy.head._1
       val s = col(sortKeys).cast("double")
-      val part = spec \ "partitionBy" match {
-        case JNothing | JNull => lit(1)
-        case p                => cexpr(p)(ctxFor(afterLocf))
-      }
+      val part = fl.partitionBy.fold(lit(1))(cexpr(_)(ctxFor(afterLocf)))
       val back = Window.partitionBy(part).orderBy(col(sortKeys))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       // forward neighbor scan as a GROWING frame on the reversed order —
       // a [current, +unbounded) frame is O(partition²) in Spark's executor
       val revBack = Window.partitionBy(part).orderBy(col(sortKeys).desc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      linear.foldLeft(afterLocf) { case (acc, (f, _)) =>
+      fl.linear.foldLeft(afterLocf) { (acc, f) =>
         val v = col(f).cast("double")
         val obs = when(v.isNotNull, struct(s.as("s"), v.as("v")))
         val prev = last(obs, ignoreNulls = true).over(back)
@@ -2028,9 +1627,9 @@ private[graft] object Stages {
             .otherwise(interp))
       }
     }
-    rest.foldLeft(afterLinear) { case (acc, (f, v)) =>
+    fl.values.foldLeft(afterLinear) { case (acc, (f, v)) =>
       addFields(acc, JObject(List(f -> JObject(List(
-        "$ifNull" -> JArray(List(JString("$" + f), v \ "value")))))))
+        "$ifNull" -> JArray(List(JString("$" + f), v)))))))
     }
   }
 
@@ -2078,16 +1677,11 @@ private[graft] object Stages {
     * reference's `cacheWindow` — declares `_watermark: {column, delay}` and
     * uses `dropDuplicatesWithinWatermark`, so seen-state expires instead of
     * growing forever. */
-  def deduplicate(df: DataFrame, spec: JValue)(implicit ctx: ExprCtx): DataFrame = {
-    val exprSpec = spec \ "expression" match {
-      case JNothing => spec
-      case e        => e
-    }
-    val keyed = df.withColumn("__dedup", cexpr(exprSpec))
-    val deduped = spec \ "_watermark" match {
-      case wm: JObject if df.isStreaming =>
-        keyed.withWatermark(str(wm \ "column"), str(wm \ "delay"))
-          .dropDuplicatesWithinWatermark("__dedup")
+  def deduplicate(df: DataFrame, d: Deduplicate)(implicit ctx: ExprCtx): DataFrame = {
+    val keyed = df.withColumn("__dedup", cexpr(d.expression))
+    val deduped = d.watermark match {
+      case Some((column, delay)) if df.isStreaming =>
+        keyed.withWatermark(column, delay).dropDuplicatesWithinWatermark("__dedup")
       case _ => keyed.dropDuplicates("__dedup")
     }
     deduped.drop("__dedup")

@@ -17,22 +17,6 @@ import org.json4s._
 private[graft] object SinkStages {
   import MongoExpr.{compile => cexpr}
 
-  private def str(v: JValue): String = v match {
-    case JString(s) => s
-    case other      => throw new IllegalArgumentException(s"expected string: $other")
-  }
-
-  private def strOr(v: JValue, default: String): String = v match {
-    case JString(s) => s
-    case _          => default
-  }
-
-  private def onFields(spec: JValue): List[String] = spec \ "on" match {
-    case JString(s) => List(s)
-    case JArray(xs) => xs.map(str)
-    case _          => List("_id")
-  }
-
   /** Default cap on distinct `$delay` target topics in one batch. */
   val DefaultMaxDelayTopics = 64
 
@@ -43,20 +27,8 @@ private[graft] object SinkStages {
     * refusal: fail loudly past the cap instead, with `_maxTopics` as the
     * explicit escape hatch. The probe reads `cap + 1` rows through a
     * pushed-down limit, so the check itself never scans all topics. */
-  private[graft] def collectTopicsGuarded(topics: DataFrame, spec: JValue,
+  private[graft] def collectTopicsGuarded(topics: DataFrame, cap: Int,
       stage: String): Seq[String] = {
-    val cap = spec \ "_maxTopics" match {
-      case JInt(i)    => i.min(Int.MaxValue).toInt
-      case JLong(l)   => math.min(l, Int.MaxValue).toInt
-      case JDouble(d) => // JSON parsers often hand integers back as doubles
-        require(d.isWhole && d >= 1 && d <= Int.MaxValue,
-          s"$stage: _maxTopics must be a positive integer: $d")
-        d.toInt
-      case JNothing   => DefaultMaxDelayTopics
-      case other      => throw new IllegalArgumentException(
-        s"$stage: _maxTopics must be a positive integer: $other")
-    }
-    require(cap > 0, s"$stage: _maxTopics must be positive: $cap")
     // saturate so _maxTopics = Int.MaxValue doesn't overflow to a negative
     // limit (cap'ing at MaxValue just disables the over-cap detection)
     val probeN = if (cap == Int.MaxValue) cap else cap + 1
@@ -79,31 +51,15 @@ private[graft] object SinkStages {
     * in the incoming schema overlays the target's value (documents here are
     * typed rows, not sparse maps).
     */
-  def merge(df: DataFrame, spec: JValue, store: DocumentStore): DataFrame = {
-    val into = str(spec \ "into")
-    val on = onFields(spec)
-    // Mongo 4.4 form (beyond the reference's Merge.java surface): an UPDATE
-    // PIPELINE as whenMatched — $set/$addFields/$unset/$project/
-    // $replaceRoot/$replaceWith over the EXISTING doc with $$new bound to
-    // the incoming doc
-    val matchPipeline: Option[List[(String, JValue)]] =
-      spec \ "whenMatched" match {
-        case JArray(stages) => Some(stages.map {
-          case JObject(List((n, sp))) => (n, sp)
-          case other => throw new IllegalArgumentException(
-            s"$$merge whenMatched pipeline stage: $other")
-        })
-        case _ => None
-      }
-    val whenMatched = strOr(spec \ "whenMatched", "merge")
-    val whenNotMatched = strOr(spec \ "whenNotMatched", "insert")
+  def merge(df: DataFrame, m: StageSpec.Merge, store: DocumentStore): DataFrame = {
+    val StageSpec.Merge(into, on, whenMatched, matchPipeline, whenNotMatched, key) = m
     val hasKey = df.columns.contains("key")
 
-    // `key` expression value becomes the document `_id` (Merge.java docs)
-    val incoming0 = spec \ "key" match {
-      case JNothing => df
-      case k        => df.withColumn("_id", cexpr(k)(Stages.ctxFor(df)))
-    }
+    // `key` expression value becomes the document `_id` (Merge.java docs);
+    // `matchPipeline` is the Mongo 4.4 whenMatched UPDATE PIPELINE (beyond
+    // the reference's Merge.java surface) over the EXISTING doc with $$new
+    // bound to the incoming doc
+    val incoming0 = key.fold(df)(k => df.withColumn("_id", cexpr(k)(Stages.ctxFor(df))))
     val incoming = incoming0.drop("key")
 
     // The reference applies messages sequentially, so several messages with
@@ -235,7 +191,10 @@ private[graft] object SinkStages {
         case ("$unset", uspec) =>
           val fs = uspec match {
             case JString(f) => Seq(f)
-            case JArray(xs) => xs.map(str)
+            case JArray(xs) => xs.map {
+              case JString(f) => f
+              case other => throw new IllegalArgumentException(s"$$unset: $other")
+            }
             case other => throw new IllegalArgumentException(s"$$unset: $other")
           }
           fs.foreach { f => env = env - f; dropType(f) }
@@ -265,9 +224,8 @@ private[graft] object SinkStages {
           }
         case ("$replaceRoot", rspec) => replace(rspec \ "newRoot")
         case ("$replaceWith", rspec) => replace(rspec)
-        case (other, _) => throw new IllegalArgumentException(
-          s"$$merge whenMatched pipeline: unsupported stage $other " +
-            "(Mongo allows $set/$addFields/$unset/$project/$replaceRoot/$replaceWith)")
+        case (other, sp) => throw new IllegalArgumentException(
+          s"$$merge whenMatched $other: expected an object, got $sp")
       }
       env.toSeq
     }
@@ -283,14 +241,12 @@ private[graft] object SinkStages {
         case "merge"        => if (iCols.contains(f)) inf(f) else tf(f)
         case "replace"      => inf(f)
         case "keepExisting" => tf(f)
-        case "fail" => raise_error(lit("$merge: whenMatched=fail and a match occurred"))
-        case other => throw new IllegalArgumentException(s"whenMatched $other")
+        case _ /* fail */ => raise_error(lit("$merge: whenMatched=fail and a match occurred"))
       }
       val onInsert = whenNotMatched match {
         case "insert"  => insertDoc(f)
         case "discard" => lit(null) // row filtered out below
-        case "fail" => raise_error(lit("$merge: whenNotMatched=fail and no match"))
-        case other => throw new IllegalArgumentException(s"whenNotMatched $other")
+        case _ /* fail */ => raise_error(lit("$merge: whenNotMatched=fail and no match"))
       }
       when(matched, onMatch).when(insertOnly, onInsert).otherwise(tf(f)).as(f)
     }
@@ -348,25 +304,11 @@ private[graft] object SinkStages {
     else echoed
   }
 
-  /** `$out` = `$merge {into, on:_id, whenMatched:replace, whenNotMatched:
-    * insert}` (Out.java:29-41). */
-  def out(df: DataFrame, spec: JValue, store: DocumentStore): DataFrame = {
-    val into = spec match {
-      case JString(s) => s
-      case o: JObject => str(o \ "into")
-      case other      => throw new IllegalArgumentException(s"$$out: $other")
-    }
-    merge(df, JObject(List("into" -> JString(into),
-      "whenMatched" -> JString("replace"), "whenNotMatched" -> JString("insert"))),
-      store)
-  }
-
   /** `$delete` (Delete.java:33-71): delete docs in `from` whose `on` fields
     * equal the message's; messages lacking the fields are dropped, others pass
     * through. */
-  def delete(df: DataFrame, spec: JValue, store: DocumentStore): DataFrame = {
-    val from = str(spec \ "from")
-    val on = onFields(spec)
+  def delete(df: DataFrame, d: StageSpec.Delete, store: DocumentStore): DataFrame = {
+    val StageSpec.Delete(from, on) = d
     val valid = df.filter(on.map(f => col(f).isNotNull).reduce(_ && _))
     val keys = valid.select(on.map(col): _*).distinct()
     val targetSchema = store.read(from).schema
@@ -395,12 +337,9 @@ private[graft] object SinkStages {
   /** `$send` (Send.java:36-68): produce to the topic named by the expression;
     * sent messages leave the stream; a non-string topic result passes the
     * message through unsent. */
-  def send(df: DataFrame, spec: JValue, producer: DataFrame => Unit)
+  def send(df: DataFrame, s: StageSpec.Send, producer: DataFrame => Unit)
       (implicit ctx: ExprCtx): DataFrame = {
-    val topicCol = cexpr(spec \ "topic" match {
-      case JNothing => spec
-      case t        => t
-    })
+    val topicCol = cexpr(s.topic)
     val typed = df.withColumn("__topic", topicCol)
     val isString = typed.schema("__topic").dataType == StringType
     if (!isString) df // non-string topic -> everything passes through
@@ -422,11 +361,11 @@ private[graft] object SinkStages {
     * defaulting to the wall clock — an event-time column makes the stage
     * deterministic and oracle-checkable.
     */
-  def delay(df: DataFrame, spec: JValue, producer: DataFrame => Unit,
+  def delay(df: DataFrame, d: StageSpec.Delay, producer: DataFrame => Unit,
       store: DocumentStore)(implicit ctx: ExprCtx): DataFrame = {
-    val duration = cexpr(spec \ "duration").cast(LongType)
-    val topic = cexpr(spec \ "topic")
-    val clock = clockExpr(df, spec)
+    val duration = cexpr(d.duration).cast(LongType)
+    val topic = cexpr(d.topic)
+    val clock = clockExpr(df, d.clock)
     val typed = df.withColumn("__topic", topic).withColumn("__durationMs", duration)
     if (typed.schema("__topic").dataType != StringType) df
     else {
@@ -439,7 +378,7 @@ private[graft] object SinkStages {
       // never parked, and a batch retry would re-produce duplicates
       val parked = scheduled.persist()
       try {
-        val topics = collectTopicsGuarded(parked.select("__topic"), spec, "$delay")
+        val topics = collectTopicsGuarded(parked.select("__topic"), d.maxTopics, "$delay")
         producer(parked)
         // park per target topic so redelivery preserves the topic routing
         topics.foreach { t =>
@@ -466,10 +405,10 @@ private[graft] object SinkStages {
     * guard can't recover the old form — small epoch-millis values (minutes
     * after epoch) are legitimate deterministic-test clocks — so callers
     * holding seconds must multiply by 1000 themselves. */
-  private def clockExpr(df: DataFrame, spec: JValue)
-      (implicit ctx: ExprCtx): Column = spec \ "_clock" match {
-    case JNothing => current_timestamp()
-    case c =>
+  private def clockExpr(df: DataFrame, clock: Option[JValue])
+      (implicit ctx: ExprCtx): Column = clock match {
+    case None => current_timestamp()
+    case Some(c) =>
       val col0 = cexpr(c)
       df.select(col0).schema.head.dataType match {
         case _: NumericType => timestamp_millis(col0.cast(LongType))
@@ -499,11 +438,10 @@ private[graft] object SinkStages {
     * expression instead of the wall clock, making the stage deterministic
     * (with the wall-clock default a batch spans one minute and emits
     * nothing, exactly like the reference inside a single minute). */
-  def probe(df: DataFrame, spec: JValue, producer: DataFrame => Unit)
+  def probe(df: DataFrame, p: StageSpec.Probe, producer: DataFrame => Unit)
       (implicit ctx: ExprCtx): DataFrame = {
-    val name = str(spec \ "name")
-    val topic = str(spec \ "topic")
-    val clock = clockExpr(df, spec)
+    val StageSpec.Probe(name, topic, clockSpec) = p
+    val clock = clockExpr(df, clockSpec)
     val counted = df.groupBy(date_trunc("minute", clock).as("minute"))
       .agg(count(lit(1)).as("count"))
     val lastMinute = counted.agg(max("minute").as("__last"))
@@ -524,13 +462,8 @@ private[graft] object SinkStages {
     * is no "later"); on a stream use
     * [[graft.streaming.StreamingPer.per]], whose processing-time timer
     * flushes partial batches after `timeout` ms. */
-  def per(df: DataFrame, spec: JValue): DataFrame = {
-    val amount = spec \ "amount" match {
-      case JInt(i)  => i.toLong
-      case JLong(l) => l
-      case other    => throw new IllegalArgumentException(s"$$per amount: $other")
-    }
-    val as = str(spec \ "as")
+  def per(df: DataFrame, p: StageSpec.Per): DataFrame = {
+    val StageSpec.Per(amount, as) = p
     val docCols = df.columns.filter(_ != "key")
     val withId = df.withColumn("__mid", monotonically_increasing_id())
     // id = partitionId << 33 | offset -> (partition, offset/amount) buckets

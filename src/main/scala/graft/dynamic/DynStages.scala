@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftops.ColumnBridge
 import org.apache.spark.sql.types.StringType
 import org.json4s._
+import graft.StageSpec
+import graft.StageSpec._
 
 import scala.jdk.CollectionConverters._
 
@@ -58,17 +60,6 @@ object DynPipeline {
         * (Pipeline.java:275-276, Context.java:35). */
       extensions: Map[String, (DataFrame, JValue, DynCtx) => DataFrame] = Map.empty)
 
-  /** Names the engine handles itself — extensions merge UNDER these. */
-  private val builtinStages: Set[String] = Set(
-    "$addFields", "$set", "$project", "$unset", "$replaceWith", "$replaceRoot",
-    "$match", "$unwind", "$redact", "$setKey", "$http", "$jslt", "$jq",
-    "$trace", "$backTrace", "$group", "$count", "$bucket", "$deduplicate",
-    "$send", "$throttle", "$per", "$delay", "$probe", "$merge", "$out",
-    "$delete", "$lookup", "$setWindowFields", "$fill", "$densify", "$sort",
-    "$limit", "$skip", "$sample", "$sortByCount", "$unionWith", "$facet",
-    "$graphLookup", "$bucketAuto", "$vectorSearch", "$documents",
-    "$rankFusion", "$search", "$score", "$scoreFusion")
-
   def run(df: DataFrame, pipelineJson: String): DataFrame =
     run(df, org.json4s.jackson.JsonMethods.parse(pipelineJson), DynCtx())
 
@@ -77,12 +68,6 @@ object DynPipeline {
 
   def run(df: DataFrame, pipeline: JValue): DataFrame = run(df, pipeline, DynCtx())
 
-  // stages that plant hidden score fields read back by {"$meta": ...}
-  private val scoreStages = Set("$vectorSearch", "$search", "$rankFusion", "$score", "$scoreFusion")
-  // stages that materialize documents outside the pipeline — hidden score
-  // fields must not leak into their payloads
-  private val sinkStages =
-    Set("$merge", "$out", "$delete", "$send", "$per", "$delay", "$probe")
   private val hiddenScoreFields = List("__vsScore", "__searchScore", "__score")
 
   /** Remove the hidden `__*Score` fields: they are visible to `$meta` WITHIN
@@ -99,43 +84,43 @@ object DynPipeline {
   }
 
   def run(df: DataFrame, pipeline: JValue, ctx: DynCtx): DataFrame =
-    run(df, pipeline, ctx, keepScores = false)
+    run(df, StageSpec.parse(pipeline), ctx, keepScores = false)
+
+  def run(df: DataFrame, stages: List[Stage], ctx: DynCtx): DataFrame =
+    run(df, stages, ctx, keepScores = false)
 
   /** `keepScores = true` preserves the hidden score fields past pipeline
     * end — the fusion stages run their INPUT pipelines through here and
     * read `__score`/`__vsScore`/`__searchScore` from the results (the
     * default end-of-run strip would blank them; found when `$scoreFusion`
     * read null scores from its freshly-`$score`d inputs). */
-  private def run(df: DataFrame, pipeline: JValue, ctx: DynCtx,
-      keepScores: Boolean): DataFrame = pipeline match {
-    case JArray(stages) =>
-      var cur = normalize(df)
-      var pending = List.newBuilder[DocFn]
-      var pendingN = 0
-      var scored = false // a score stage ran and its hidden fields may linger
-      def flush(): Unit = {
-        val fns = pending.result()
-        if (fns.nonEmpty) { cur = applyFused(cur, fns); pending = List.newBuilder[DocFn]; pendingN = 0 }
+  /** The stage-level `_trace` flag is accepted and ignored, like `$trace`:
+    * the fused mapPartitions runs have no per-stage plan node to observe
+    * (the typed engine turns it into an `observe` metric). */
+  private def run(df: DataFrame, stages: List[Stage], ctx: DynCtx,
+      keepScores: Boolean): DataFrame = {
+    var cur = normalize(df)
+    var pending = List.newBuilder[DocFn]
+    var scored = false // a score stage ran and its hidden fields may linger
+    def flush(): Unit = {
+      val fns = pending.result()
+      if (fns.nonEmpty) { cur = applyFused(cur, fns); pending = List.newBuilder[DocFn] }
+    }
+    stages.foreach { st =>
+      if (!StageSpec.table.contains(st.name) && ctx.extensions.contains(st.name)) {
+        flush()
+        cur = ctx.extensions(st.name)(cur, st.spec, ctx)
+      } else if (st.info.fusable) pending += compileDocStage(st)
+      else {
+        if (scored && st.info.kind == StageSpec.Sink) { pending += stripScores; scored = false }
+        flush()
+        cur = applyBarrier(cur, st, ctx)
+        if (st.info.scores) scored = true
       }
-      stages.foreach {
-        case JObject(List((name, spec))) =>
-          if (!builtinStages(name) && ctx.extensions.contains(name)) {
-            flush()
-            cur = ctx.extensions(name)(cur, spec, ctx)
-          } else compileDocStage(name, spec) match {
-            case Some(fn) => pending += fn; pendingN += 1
-            case None =>
-              if (scored && sinkStages(name)) { pending += stripScores; scored = false }
-              flush()
-              cur = applyBarrier(cur, name, spec, ctx)
-              if (scoreStages(name)) scored = true
-          }
-        case other => throw new IllegalArgumentException(s"bad stage: $other")
-      }
-      if (scored && !keepScores) pending += stripScores
-      flush()
-      cur
-    case other => throw new IllegalArgumentException(s"pipeline must be an array: $other")
+    }
+    if (scored && !keepScores) pending += stripScores
+    flush()
+    cur
   }
 
   /** Accept (key, doc) or just (doc); everything else is an error. */
@@ -162,35 +147,31 @@ object DynPipeline {
 
   // ---- document-local stages --------------------------------------------------
 
-  /** Stages that are per-document (fusable). Returns None for barrier stages. */
-  private def compileDocStage(name: String, spec: JValue): Option[DocFn] = name match {
-    case "$addFields" | "$set" => Some(addFields(spec))
-    case "$project"            => Some(project(spec))
-    case "$unset"              => Some(unset(spec))
-    case "$replaceWith"        => Some(replaceWith(spec))
-    case "$replaceRoot"        => Some(replaceWith(spec \ "newRoot"))
-    case "$match"              =>
-      val p = DynMatch.compile(spec)
-      Some(m => if (p.test(DynExpr.DCtx(m._2, Map.empty))) Iterator.single(m) else Iterator.empty)
-    case "$unwind"             => Some(unwind(spec))
-    case "$redact"             => Some(redact(spec))
-    case "$setKey"             =>
-      val op = DynExpr.compile(spec)
-      Some { case (_, doc) => Iterator.single((keyString(op.eval(DynExpr.DCtx(doc, Map.empty))), doc)) }
-    case "$http"               => Some(http(spec))
-    case "$jslt"               => Some(jslt(spec))
-    case "$jq"                 => Some(jq(spec))
-    case "$trace" | "$backTrace" => Some(Iterator.single(_))
-    case "$group" | "$count" | "$bucket" | "$deduplicate" |
-         "$send" | "$throttle" | "$per" | "$delay" | "$probe" |
-         "$merge" | "$out" | "$delete" | "$lookup" |
-         "$setWindowFields" | "$fill" | "$densify" | "$sort" | "$limit" |
-         "$skip" | "$sample" | "$sortByCount" | "$unionWith" |
-         "$facet" | "$graphLookup" | "$bucketAuto" | "$vectorSearch" |
-         "$documents" | "$rankFusion" | "$search" | "$score" |
-         "$scoreFusion" | "$geoNear" =>
-      None // barrier stages
-    case _ => Some(Iterator.single(_)) // unrecognized stages pass through (Pipeline.java:265)
+  /** A per-document (fusable, [[StageSpec.Info.fusable]]) stage. */
+  private def compileDocStage(st: Stage): DocFn = {
+    val spec = st.spec
+    st.args match {
+      case u: Unwind => unwind(u)
+      case _ => st.name match {
+        case "$addFields" | "$set" => addFields(spec)
+        case "$project"            => project(spec)
+        case "$unset"              => unset(spec)
+        case "$replaceWith"        => replaceWith(spec)
+        case "$replaceRoot"        => replaceWith(spec \ "newRoot")
+        case "$match"              =>
+          val p = DynMatch.compile(spec)
+          m => if (p.test(DynExpr.DCtx(m._2, Map.empty))) Iterator.single(m) else Iterator.empty
+        case "$redact"             => redact(spec)
+        case "$setKey"             =>
+          val op = DynExpr.compile(spec)
+          (m: Msg) => Iterator.single((keyString(op.eval(DynExpr.DCtx(m._2, Map.empty))), m._2))
+        case "$http"               => http(spec)
+        case "$jslt"               => jslt(spec)
+        case "$jq"                 => jq(spec)
+        // $trace/$backTrace and unrecognized stages pass through (Pipeline.java:265)
+        case _                     => Iterator.single(_)
+      }
+    }
   }
 
   /** $setKey stringification: raw text for strings (reference
@@ -358,19 +339,21 @@ object DynPipeline {
     }
   }
 
-  /** $unwind: path form or {path, includeArrayIndex, preserveNullAndEmptyArrays}. */
-  private def unwind(spec: JValue): DocFn = {
-    val (path, indexField, preserve) = spec match {
-      case JString(p) => (p, None, false)
-      case o: JObject =>
-        val JString(p) = (o \ "path"): @unchecked
-        val idx = o \ "includeArrayIndex" match { case JString(f) => Some(f); case _ => None }
-        val pres = o \ "preserveNullAndEmptyArrays" == JBool(true)
-        (p, idx, pres)
-      case other => throw new IllegalArgumentException(s"$$unwind: $other")
+  /** $unwind: path form or {path, includeArrayIndex,
+    * preserveNullAndEmptyArrays, newIds}; `newIds` gives every unwound
+    * document a fresh UUID `_id` and re-keys it (the typed engine's rule). */
+  private def unwind(u: Unwind): DocFn = {
+    val Unwind(path, indexField, preserve, newIds) = u
+    val segs = path.split('.').toList
+    if (newIds) {
+      val plain = unwind(u.copy(newIds = false))
+      return msg => plain(msg).map { case (_, d) =>
+        val id = java.util.UUID.randomUUID().toString
+        val o = copy(d).asInstanceOf[ObjectNode]
+        o.put("_id", id)
+        (id, o)
+      }
     }
-    require(path.startsWith("$"), s"$$unwind path must start with $$: $path")
-    val segs = path.drop(1).split('.').toList
     msg => {
       val (k, doc) = msg
       getPath(doc, segs) match {
@@ -592,36 +575,28 @@ object DynPipeline {
 
   // ---- barrier stages ---------------------------------------------------------
 
-  private def applyBarrier(df: DataFrame, name: String, spec: JValue,
-      ctx: DynCtx): DataFrame = name match {
-    case "$group"       => group(df, spec)
-    case "$bucket"      => group(df, graft.Stages.bucketToGroup(spec))
-    case "$count"       =>
-      val JString(field) = spec: @unchecked
+  private def applyBarrier(df: DataFrame, st: Stage, ctx: DynCtx): DataFrame = {
+    val spec = st.spec
+    st.args match {
+    case g: Group       => group(df, g)
+    case Count(field)   =>
       // Mongo's $count ($group{_id:null}+$project sugar) emits NOTHING on
       // empty input; a bare .agg() would fabricate a 0 row (fuzzer find)
       df.agg(count(lit(1)).as("__n")).filter(col("__n") > 0).select(
         lit(null).cast(StringType).as("key"),
         concat(lit(s"""{"$field":"""), col("__n").cast(StringType), lit("}")).as("doc"))
-    case "$deduplicate" => deduplicate(df, spec)
-    case "$setWindowFields" => setWindowFields(df, spec)
-    case "$fill"        => fillStage(df, spec)
-    case "$densify"     => densifyStage(df, spec)
-    case "$sort"        => sortStage(df, spec)
-    case "$limit" => spec match {
-      case JInt(n) => df.limit(n.toInt)
-      case other   => throw new IllegalArgumentException(s"$$limit: $other")
-    }
-    case "$skip" => spec match {
-      case JInt(n) => df.offset(n.toInt)
-      case other   => throw new IllegalArgumentException(s"$$skip: $other")
-    }
-    case "$sample" => spec \ "size" match { // deterministic hash order —
+    case d: Deduplicate => deduplicate(df, d)
+    case w: SetWindowFields => setWindowFields(df, w)
+    case f: Fill        => fillStage(df, f)
+    case d: Densify     => densifyStage(df, d)
+    case Sort(keys)     => sortStage(df, keys)
+    case Limit(n)       => df.limit(n)
+    case Skip(n)        => df.offset(n)
+    case Sample(n) => // deterministic hash order —
       // priority = xxhash64 of the canonical {"_id": <id>} rendering, the
       // SAME string the typed engine hashes (to_json(struct(_id))), so both
       // engines sample identical subsets; docs without an _id fall back to
       // the raw doc text (engine-local)
-      case JInt(n) =>
         val keyed = normalize(df).as(tuple2Enc).mapPartitions { it =>
           it.map { case (k, s) =>
             val d = parse(s)
@@ -632,9 +607,18 @@ object DynPipeline {
             (k, s, pr)
           }
         }(tuple3Enc).toDF("key", "doc", "__pr")
-        keyed.orderBy(xxhash64(col("__pr"))).limit(n.toInt).select("key", "doc")
-      case other   => throw new IllegalArgumentException(s"$$sample: $other")
-    }
+        keyed.orderBy(xxhash64(col("__pr"))).limit(n).select("key", "doc")
+    case s: Send        => send(df, s, ctx)
+    case p: Per         => per(df, p)
+    case d: Delay       => delay(df, d, ctx)
+    case p: Probe       => probe(df, p, ctx)
+    case m: StageSpec.Merge => mergeStage(df, m, ctx)
+    case d: Delete      => delete(df, d, ctx)
+    case l: Lookup      => lookup(df, l, ctx)
+    case s: Score       => score(df, s)
+    case f: Fusion if st.name == "$rankFusion" => rankFusion(df, f, ctx)
+    case f: Fusion      => scoreFusion(df, f, ctx)
+    case _ => st.name match {
     case "$sortByCount" =>
       val op = DynExpr.compile(spec)
       normalize(df).as(tuple2Enc).mapPartitions { it =>
@@ -694,42 +678,22 @@ object DynPipeline {
         }
       }(tuple2Enc).toDF("key", "doc")
     case "$throttle"    => graft.Stages.throttle(df, spec) // schema-free pacing
-    case "$send"        => send(df, spec, ctx)
-    case "$per"         => per(df, spec)
-    case "$delay"       => delay(df, spec, ctx)
-    case "$probe"       => probe(df, spec, ctx)
-    case "$merge"       => mergeStage(df, spec, ctx)
-    case "$out" =>
-      val into = spec match {
-        case JString(s) => s
-        case o: JObject => o \ "into" match {
-          case JString(s) => s
-          case other      => throw new IllegalArgumentException(s"$$out into: $other")
-        }
-        case other => throw new IllegalArgumentException(s"$$out: $other")
-      }
-      mergeStage(df, JObject(List("into" -> JString(into),
-        "whenMatched" -> JString("replace"), "whenNotMatched" -> JString("insert"))), ctx)
-    case "$delete"      => delete(df, spec, ctx)
-    case "$lookup"      => lookup(df, spec, ctx)
     case "$graphLookup" => graphLookup(df, spec, ctx)
     case "$bucketAuto"  => bucketAuto(df, spec)
     case "$vectorSearch" => vectorSearch(df, spec)
     case "$geoNear"     => geoNear(df, spec)
-    case "$rankFusion"  => rankFusion(df, spec, ctx)
-    case "$score"       => score(df, spec)
-    case "$scoreFusion" => scoreFusion(df, spec, ctx)
     case "$search"      => search(df, spec)
     case other => throw new IllegalArgumentException(s"dynamic mode: unsupported stage $other")
+    }
+    }
   }
 
   // ---- sink / effect stages ---------------------------------------------------
 
   /** `$send` (Send.java:36-68), per MESSAGE: a string topic result sends the
     * message (it leaves the stream); anything else passes it through. */
-  private def send(df: DataFrame, spec: JValue, ctx: DynCtx): DataFrame = {
-    val topicSpec = spec \ "topic" match { case JNothing => spec; case t => t }
-    val op = DynExpr.compile(topicSpec)
+  private def send(df: DataFrame, s: Send, ctx: DynCtx): DataFrame = {
+    val op = DynExpr.compile(s.topic)
     val tuple3Enc = Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING)
     val typed = df.as(tuple2Enc).mapPartitions { it =>
       it.map { case (k, s) =>
@@ -744,16 +708,8 @@ object DynPipeline {
 
   /** `$per` (Per.java:28-49): batches of `amount` docs per input partition
     * become one `{as: [...]}` doc keyed by a fresh UUID. */
-  private def per(df: DataFrame, spec: JValue): DataFrame = {
-    val amount = spec \ "amount" match {
-      case JInt(i) => i.toInt
-      case other   => throw new IllegalArgumentException(s"$$per amount: $other")
-    }
-    val as = spec \ "as" match {
-      case JString(s) => s
-      case other      => throw new IllegalArgumentException(s"$$per as: $other")
-    }
-    require(amount > 0, "$per.amount must be positive")
+  private def per(df: DataFrame, p: Per): DataFrame = {
+    val Per(amount, as) = p
     normalize(df).as(tuple2Enc).mapPartitions { it =>
       it.map(_._2).grouped(amount).map { batch =>
         val o = obj()
@@ -769,14 +725,11 @@ object DynPipeline {
     * topic) are stamped `__deliverAt`, produced AND parked in the store
     * collection `__delay__<topic>`; invalid ones pass through. `_clock`
     * (extension) evaluates an event-time epoch-millis expression per doc. */
-  private def delay(df: DataFrame, spec: JValue, ctx: DynCtx): DataFrame = {
+  private def delay(df: DataFrame, dl: Delay, ctx: DynCtx): DataFrame = {
     require(ctx.store != null, "$delay needs a DocumentStore in dynamic mode")
-    val topicOp = DynExpr.compile(spec \ "topic")
-    val durOp = DynExpr.compile(spec \ "duration")
-    val clockOp = spec \ "_clock" match {
-      case JNothing => None
-      case c        => Some(DynExpr.compile(c))
-    }
+    val topicOp = DynExpr.compile(dl.topic)
+    val durOp = DynExpr.compile(dl.duration)
+    val clockOp = dl.clock.map(DynExpr.compile)
     val enc4 = Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING,
       Encoders.scalaLong)
     val typed = df.as(tuple2Enc).mapPartitions { it =>
@@ -805,7 +758,7 @@ object DynPipeline {
     // that are never parked, re-produced on retry), unpersist on any exit
     try {
       val topics = graft.SinkStages.collectTopicsGuarded(
-        scheduled.select("__topic"), spec, "$delay")
+        scheduled.select("__topic"), dl.maxTopics, "$delay")
       ctx.producer(scheduled)
       // cardinality-guarded: one park job per topic (see SinkStages doc)
       topics.foreach { t =>
@@ -822,19 +775,9 @@ object DynPipeline {
 
   /** `$probe` (Probe.java:29-84): complete-minute counts `{name, minute,
     * count}` to a topic; passthrough. `_clock` = event-time epoch millis. */
-  private def probe(df: DataFrame, spec: JValue, ctx: DynCtx): DataFrame = {
-    val name = spec \ "name" match {
-      case JString(s) => s
-      case other      => throw new IllegalArgumentException(s"$$probe name: $other")
-    }
-    val topic = spec \ "topic" match {
-      case JString(s) => s
-      case other      => throw new IllegalArgumentException(s"$$probe topic: $other")
-    }
-    val clockOp = spec \ "_clock" match {
-      case JNothing => None
-      case c        => Some(DynExpr.compile(c))
-    }
+  private def probe(df: DataFrame, p: Probe, ctx: DynCtx): DataFrame = {
+    val Probe(name, topic, clock) = p
+    val clockOp = clock.map(DynExpr.compile)
     val enc3 = Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaLong)
     val stamped = df.as(tuple2Enc).mapPartitions { it =>
       it.map { case (k, s) =>
@@ -883,13 +826,6 @@ object DynPipeline {
   private val tuple3Enc =
     Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING)
 
-  private def onFields(spec: JValue): List[String] = spec \ "on" match {
-    case JString(s) => List(s)
-    case JArray(xs) => xs.map { case JString(s) => s
-      case other => throw new IllegalArgumentException(s"on: $other") }
-    case _ => List("_id")
-  }
-
   /** Canonical string of a doc's `on` values (dotted paths), or null when
     * any is missing — the join/bucket key for dynamic store stages. Multi-
     * field keys join on NUL, which cannot appear inside rendered JSON. */
@@ -924,7 +860,8 @@ object DynPipeline {
     case "$set" | "$addFields" =>
       val fs = sp match {
         case JObject(fields) => fields.map { case (f, v) => (f, DynExpr.compile(v)) }
-        case other => throw new IllegalArgumentException(s"$name: $other")
+        case other => throw new IllegalArgumentException(
+          s"$$merge whenMatched $name: expected an object, got $other")
       }
       (doc, vars) => {
         val pre = DynExpr.DCtx(doc, vars)
@@ -948,7 +885,8 @@ object DynPipeline {
     case "$project" =>
       val fields = sp match {
         case JObject(fs) => fs
-        case other => throw new IllegalArgumentException(s"$$project: $other")
+        case other => throw new IllegalArgumentException(
+          s"$$merge whenMatched $name: expected an object, got $other")
       }
       def falsy(v: JValue) = v == JInt(0) || v == JBool(false)
       val nonId = fields.filterNot(_._1 == "_id")
@@ -982,7 +920,7 @@ object DynPipeline {
           out
         }
       }
-    case "$replaceRoot" | "$replaceWith" =>
+    case _ => // $replaceRoot | $replaceWith (StageSpec admits no other)
       val op = DynExpr.compile(
         if (name == "$replaceRoot") sp \ "newRoot" else sp)
       (doc, vars) => {
@@ -991,29 +929,14 @@ object DynPipeline {
           s"$$merge whenMatched $name must produce a document, got $v")
         v.deepCopy[JsonNode]()
       }
-    case other => throw new IllegalArgumentException(
-      s"$$merge whenMatched pipeline: unsupported stage $other " +
-        "(Mongo allows $set/$addFields/$unset/$project/$replaceRoot/$replaceWith)")
   }
 
-  private def mergeStage(df: DataFrame, spec: JValue, ctx: DynCtx): DataFrame = {
+  private def mergeStage(df: DataFrame, m: StageSpec.Merge, ctx: DynCtx): DataFrame = {
     require(ctx.store != null, "$merge needs a DocumentStore in dynamic mode")
-    val into = spec \ "into" match {
-      case JString(s) => s
-      case other      => throw new IllegalArgumentException(s"$$merge into: $other")
-    }
-    val on = onFields(spec)
-    val matchPipe: Option[List[UpdFn]] = spec \ "whenMatched" match {
-      case JArray(stages) => Some(stages.map {
-        case JObject(List((n, sp))) => compileUpdateStage(n, sp)
-        case other => throw new IllegalArgumentException(
-          s"$$merge whenMatched pipeline stage: $other")
-      })
-      case _ => None
-    }
-    val whenMatched = spec \ "whenMatched" match { case JString(s) => s; case _ => "merge" }
-    val whenNotMatched = spec \ "whenNotMatched" match { case JString(s) => s; case _ => "insert" }
-    val keyOp = spec \ "key" match { case JNothing => None; case k => Some(DynExpr.compile(k)) }
+    val StageSpec.Merge(into, on, whenMatched, updates, whenNotMatched, key) = m
+    val matchPipe: Option[List[UpdFn]] =
+      updates.map(_.map { case (n, sp) => compileUpdateStage(n, sp) })
+    val keyOp = key.map(DynExpr.compile)
 
     val incoming = df.as(tuple2Enc).mapPartitions { it =>
       it.map { case (_, s) =>
@@ -1076,9 +999,8 @@ object DynPipeline {
                     val o = parse(ts).deepCopy[ObjectNode]()
                     o.setAll[ObjectNode](parse(is).asInstanceOf[ObjectNode])
                     o
-                  case "fail" => throw new IllegalStateException(
+                  case _ /* fail */ => throw new IllegalStateException(
                     "$merge: whenMatched=fail and a match occurred")
-                  case other => throw new IllegalArgumentException(s"whenMatched $other")
                 }
               }
               Iterator.single((render(merged), onk, "w"))
@@ -1090,9 +1012,8 @@ object DynPipeline {
                     o.set[JsonNode]("_id", text(java.util.UUID.randomUUID().toString))
                   Iterator.single((render(o), onk, "w"))
                 case "discard" => Iterator.empty
-                case "fail" => throw new IllegalStateException(
+                case _ /* fail */ => throw new IllegalStateException(
                   "$merge: whenNotMatched=fail and no match")
-                case other => throw new IllegalArgumentException(s"whenNotMatched $other")
               }
             case (Some(ts), None) => Iterator.single((ts, onk, "k"))
             case (None, None)     => Iterator.empty
@@ -1129,13 +1050,9 @@ object DynPipeline {
     * collection (only touched buckets rewritten when bucketed on the `on`
     * key); messages lacking the `on` fields are dropped, the rest pass
     * through. */
-  private def delete(df: DataFrame, spec: JValue, ctx: DynCtx): DataFrame = {
+  private def delete(df: DataFrame, d: Delete, ctx: DynCtx): DataFrame = {
     require(ctx.store != null, "$delete needs a DocumentStore in dynamic mode")
-    val from = spec \ "from" match {
-      case JString(s) => s
-      case other      => throw new IllegalArgumentException(s"$$delete from: $other")
-    }
-    val on = onFields(spec)
+    val Delete(from, on) = d
     val keyed = df.as(tuple2Enc).mapPartitions { it =>
       it.map { case (k, s) => (k, s, onKey(parse(s), on)) }
     }(tuple3Enc).toDF("key", "doc", "__k").persist()
@@ -1195,22 +1112,10 @@ object DynPipeline {
     * pre-grouped on the `from` side so each message gains one array field.
     * `unwind: true` emits one message per match; `inner: true` drops
     * match-less messages. Pipeline-form lookups need the typed engine. */
-  private def lookup(df: DataFrame, spec: JValue, ctx: DynCtx): DataFrame = {
-    val from = spec \ "from" match {
-      case JString(s) => s
-      case other      => throw new IllegalArgumentException(s"$$lookup from: $other")
-    }
-    val (local, foreign) = (spec \ "localField", spec \ "foreignField") match {
-      case (JString(l), JString(f)) => (l, f)
-      case _ => return pipelineLookup(df, spec, ctx)
-    }
-    val as = spec \ "as" match {
-      case JString(s) => s
-      case other      => throw new IllegalArgumentException(s"$$lookup as: $other")
-    }
-    val unwindFlag = (spec \ "unwind") == JBool(true)
-    val inner = (spec \ "inner") == JBool(true)
-    val fromFrame = resolveFrom(spec, from, ctx, df.sparkSession)
+  private def lookup(df: DataFrame, l: Lookup, ctx: DynCtx): DataFrame = {
+    val (local, foreign) = l.local.getOrElse(return pipelineLookup(df, l, ctx))
+    val (as, unwindFlag, inner) = (l.as, l.unwind, l.inner)
+    val fromFrame = resolveFrom(l, ctx, df.sparkSession)
 
     val left = df.as(tuple2Enc).mapPartitions { it =>
       it.map { case (k, s) => (k, s, onKey(parse(s), List(local))) }
@@ -1265,58 +1170,22 @@ object DynPipeline {
     * `connectionString`/`database` form (Lookup.java:74-78): a second
     * catalog keyed by the connection, defaulting to a connector-native
     * [[graft.sources.MongoStore]] read rendered to the engine's doc shape. */
-  private def resolveFrom(spec: JValue, from: String, ctx: DynCtx,
-      spark: org.apache.spark.sql.SparkSession): DataFrame =
-    (spec \ "connectionString", spec \ "database") match {
-      case (JString(uri), JString(dbn)) =>
-        ctx.remoteCatalog.map(_(uri, dbn, from)).getOrElse {
-          new graft.sources.MongoStore(spark, uri, dbn).read(from)
-            .toJSON.toDF("doc")
-        }
-      case _ => ctx.catalog(from)
-    }
+  private def resolveFrom(l: Lookup, ctx: DynCtx,
+      spark: org.apache.spark.sql.SparkSession): DataFrame = l.remote match {
+    case Some((uri, dbn)) =>
+      ctx.remoteCatalog.map(_(uri, dbn, l.from)).getOrElse {
+        new graft.sources.MongoStore(spark, uri, dbn).read(l.from)
+          .toJSON.toDF("doc")
+      }
+    case None => ctx.catalog(l.from)
+  }
 
-  private def pipelineLookup(df: DataFrame, spec: JValue, ctx: DynCtx): DataFrame = {
-    import org.json4s.jackson.JsonMethods
-    val from = spec \ "from" match {
-      case JString(s) => s
-      case other      => throw new IllegalArgumentException(s"$$lookup from: $other")
-    }
-    val as = spec \ "as" match {
-      case JString(s) => s
-      case other      => throw new IllegalArgumentException(s"$$lookup as: $other")
-    }
-    val unwindFlag = (spec \ "unwind") == JBool(true)
-    val inner = (spec \ "inner") == JBool(true)
-    val letSpecs: List[(String, DynExpr.DOp)] = spec \ "let" match {
-      case JObject(vs) => vs.map { case (n, e) => n -> DynExpr.compile(e) }
-      case _           => Nil
-    }
-    val letNames = letSpecs.map(_._1).toSet
-    val JArray(subStages) = ((spec \ "pipeline"): @unchecked)
-
-    def refsVars(v: JValue): Boolean = v match {
-      case JString(s) if s.startsWith("$$") => letNames(s.drop(2).takeWhile(_ != '.'))
-      case JObject(fields) => fields.exists { case (_, fv) => refsVars(fv) }
-      case JArray(items)   => items.exists(refsVars)
-      case _               => false
-    }
-    val (prefixStages, rest) = subStages.span(st => !refsVars(st))
-    def isSort(st: JValue) = st match {
-      case JObject(List(("$sort", _))) => true
-      case _                           => false
-    }
-    val (matchSpec, trailing) = rest match {
-      case JObject(List(("$match", m))) :: t => (Some(m), t)
-      case Nil                               => (None, Nil)
-      case other :: _ => throw new IllegalArgumentException(
-        "$lookup pipeline: the first let-variable-referencing stage must be " +
-          s"a $$match, got ${JsonMethods.compact(JsonMethods.render(other))}")
-    }
-    if (prefixStages.exists(isSort) && !trailing.exists(isSort))
-      throw new IllegalArgumentException(
-        "$lookup pipeline: a $sort before the correlated $match cannot be " +
-          "preserved in the `as` array; add a trailing $sort after it")
+  private def pipelineLookup(df: DataFrame, l: Lookup, ctx: DynCtx): DataFrame = {
+    val (as, unwindFlag, inner) = (l.as, l.unwind, l.inner)
+    val letSpecs: List[(String, DynExpr.DOp)] =
+      l.let.map { case (n, e) => n -> DynExpr.compile(e) }
+    def refsVars(v: JValue): Boolean = StageSpec.refsVars(v, l.let.map(_._1).toSet)
+    val (prefixStages, matchSpec, trailing) = (l.prefix, l.correlated, l.trailing)
 
     // correlated $match: all-$eq conditions hash-join (the scale path);
     // anything else (theta: $gt/$lte/$or/...) falls back to a SIZE-GUARDED
@@ -1357,7 +1226,7 @@ object DynPipeline {
     val localSides = eqPairs.getOrElse(Nil).map(_._1)
     val foreignSides = eqPairs.getOrElse(Nil).map(_._2)
 
-    val fromFrame = resolveFrom(spec, from, ctx, df.sparkSession)
+    val fromFrame = resolveFrom(l, ctx, df.sparkSession)
     val effFrom = normalize(
       if (prefixStages.isEmpty) fromFrame
       else run(fromFrame, JArray(prefixStages), ctx))
@@ -1392,33 +1261,19 @@ object DynPipeline {
 
     // trailing stages over the matched docs of ONE message
     def applyTrailing(xs: List[JsonNode]): List[JsonNode] =
-      trailing.foldLeft(xs) {
-        case (acc, JObject(List(("$sort", JObject(keys))))) =>
-          def dir(v: JValue): Int = v match {
-            case JInt(i) => if (i >= 0) 1 else -1
-            case JLong(l) => if (l >= 0) 1 else -1
-            case _ => 1
-          }
+      trailing.foldLeft(xs) { (acc, st) => st.args match {
+        case Sort(keys) =>
           acc.sortWith { (a, b) =>
-            keys.iterator.map { case (f, d) =>
+            keys.iterator.map { case (f, asc) =>
               DynJson.compare(DynExpr.resolve(a, f.split('.').toList),
-                DynExpr.resolve(b, f.split('.').toList)) * dir(d)
+                DynExpr.resolve(b, f.split('.').toList)) * (if (asc) 1 else -1)
             }.find(_ != 0).exists(_ < 0)
           }
-        case (acc, JObject(List(("$limit", n)))) =>
-          val lim = n match {
-            case JInt(i)  => i.toInt
-            case JLong(l) => l.toInt
-            case other    => throw new IllegalArgumentException(s"$$limit: $other")
-          }
-          acc.take(lim)
-        case (acc, JObject(List(("$project", p)))) =>
-          val fn = project(p)
+        case Limit(n) => acc.take(n)
+        case _ => // $project
+          val fn = project(st.spec)
           acc.flatMap(d => fn((null, d)).map(_._2).toList)
-        case (_, other) => throw new IllegalArgumentException(
-          "$lookup trailing sub-stage must be $project/$sort/$limit: " +
-            JsonMethods.compact(JsonMethods.render(other)))
-      }
+      } }
 
     thetaOp match {
       case Some(op) =>
@@ -1751,53 +1606,20 @@ object DynPipeline {
     * DISTINCT `_id`. The fused score lands in the hidden `__score` field
     * where `{"$meta": "score"}` reads it. Rank windows only ever span the
     * bounded candidate lists — never the whole stream. */
-  private def rankFusion(df: DataFrame, spec: JValue, ctx: DynCtx): DataFrame = {
+  private def rankFusion(df: DataFrame, f: Fusion, ctx: DynCtx): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
-    val JObject(pipes) = ((spec \ "input" \ "pipelines"): @unchecked)
-    val weights: Map[String, Double] = spec \ "combination" \ "weights" match {
-      case JObject(ws) => ws.map { case (n, v) => n -> (v match {
-        case JInt(i) => i.toDouble; case JLong(l) => l.toDouble
-        case JDouble(d) => d; case _ => 1.0 }) }.toMap
-      case _ => Map.empty
-    }
-    val allowed = Set("$match", "$sort", "$limit", "$skip", "$sample",
-      "$vectorSearch", "$search")
     val idOp = DynExpr.compile(JString("$_id"))
-    val contribs = pipes.map { case (pname, pstages) =>
-      val JArray(stages) = (pstages: @unchecked)
-      val names = stages.collect { case JObject(fs) =>
-        fs.collectFirst { case (n, _) if n != "_trace" => n }.getOrElse("") }
-      val bad = names.filterNot(allowed)
-      if (bad.nonEmpty) throw new IllegalArgumentException(
-        s"$$rankFusion pipeline '$pname': only selection stages " +
-          s"(${allowed.mkString(" ")}) are allowed, got ${bad.mkString(" ")}")
-      if (!names.contains("$limit") && !names.contains("$vectorSearch"))
-        throw new IllegalArgumentException(
-          s"$$rankFusion pipeline '$pname' must be bounded: add a $$limit")
-      val out = run(df, pstages, ctx, keepScores = true)
+    val contribs = f.inputs.map { case (pname, stages) =>
+      val out = run(df, stages, ctx, keepScores = true)
       // rank order: trailing $sort keys (binary BSON order), else the score
       val sortOps: List[(DynExpr.DOp, Boolean)] =
-        stages.reverse.collectFirst {
-          case JObject(List(("$sort", JObject(keys)))) =>
-            keys.map { case (f, dir) =>
-              (DynExpr.compile(JString("$" + f)), dir match {
-                case JInt(i)    => i >= 0
-                case JLong(l)   => l >= 0
-                case JDouble(x) => x >= 0
-                case _          => true
-              })
-            }
-        }.getOrElse {
-          if (names.contains("$vectorSearch"))
-            List((DynExpr.compile(JString("$__vsScore")), false))
-          else if (names.contains("$search"))
-            List((DynExpr.compile(JString("$__searchScore")), false))
-          else throw new IllegalArgumentException(
-            s"$$rankFusion pipeline '$pname' must rank: end with $$sort " +
-              "or include $vectorSearch/$search")
-        }
+        stages.reverse.collectFirst { case Stage(_, _, _, _, Sort(keys)) =>
+          keys.map { case (k, asc) => (DynExpr.compile(JString("$" + k)), asc) }
+        }.getOrElse(List((DynExpr.compile(JString(
+          if (stages.exists(_.name == "$vectorSearch")) "$__vsScore"
+          else "$__searchScore")), false)))
       val schema = StructType(Seq(StructField("key", StringType),
         StructField("doc", StringType), StructField("__fid", StringType)) ++
         sortOps.indices.map(i => StructField(s"__s$i", BinaryType)))
@@ -1808,7 +1630,7 @@ object DynPipeline {
             sortOps.map { case (op, _) => sortableKey(op.eval(dctx)) })
         }
       }(Encoders.row(schema))
-      val w = weights.getOrElse(pname, 1d)
+      val w = f.weights.getOrElse(pname, 1d)
       val rank = row_number().over(Window.orderBy(
         sortOps.zipWithIndex.map { case ((_, asc), i) =>
           if (asc) col(s"__s$i").asc else col(s"__s$i").desc
@@ -1830,22 +1652,6 @@ object DynPipeline {
           (k, render(d))
         }
       }(tuple2Enc).toDF("key", "doc")
-  }
-
-  /** Normalize the `__s` score column: none / sigmoid / minMaxScaler.
-    * minMax stats are a single-row broadcast aggregate — never a window. */
-  private def normScore(df: DataFrame, norm: String): DataFrame = norm match {
-    case "none" => df
-    case "sigmoid" => df.withColumn("__s",
-      lit(1.0) / (lit(1.0) + exp(-col("__s"))))
-    case "minMaxScaler" =>
-      val stats = df.agg(min(col("__s")).as("__mn"), max(col("__s")).as("__mx"))
-      df.crossJoin(broadcast(stats)).withColumn("__s",
-        when(col("__mx") === col("__mn"), lit(1.0))
-          .otherwise((col("__s") - col("__mn")) / (col("__mx") - col("__mn"))))
-        .drop("__mn", "__mx")
-    case other =>
-      throw new IllegalArgumentException(s"score normalization: $other")
   }
 
   /** Fold the `__s` column into each doc's hidden `__score` field. */
@@ -1880,14 +1686,8 @@ object DynPipeline {
   /** `$score` in dynamic mode (Mongo 8.2): evaluates `score` per document
     * into the hidden `__score` field ({"$meta": "score"} reads it), with
     * optional sigmoid / minMaxScaler normalization. */
-  private def score(df: DataFrame, spec: JValue): DataFrame = {
-    val op = DynExpr.compile(spec \ "score")
-    val norm = spec \ "normalization" match {
-      case JString(s) => s
-      case JNothing   => "none"
-      case other => throw new IllegalArgumentException(
-        s"$$score normalization: $other")
-    }
+  private def score(df: DataFrame, sc: Score): DataFrame = {
+    val op = DynExpr.compile(sc.score)
     val withS = normalize(df).as(tuple2Enc).mapPartitions { it =>
       it.map { case (k, s) =>
         val v = op.eval(DynExpr.DCtx(parse(s), Map.empty))
@@ -1895,7 +1695,7 @@ object DynPipeline {
       }
     }(Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.DOUBLE))
       .toDF("key", "doc", "__s")
-    embedScore(normScore(withS, norm))
+    embedScore(graft.Stages.normalizeScore(withS, "__s", sc.normalization))
   }
 
   /** `$scoreFusion` in dynamic mode (Mongo 8.1, score flavor): each input
@@ -1904,64 +1704,29 @@ object DynPipeline {
     * combine as sum/nPipelines per distinct `_id` — a document absent from
     * a pipeline contributes 0 from it, the same absent rule as
     * $rankFusion's RRF. No rank window, so inputs need no boundedness. */
-  private def scoreFusion(df: DataFrame, spec: JValue, ctx: DynCtx): DataFrame = {
-    val JObject(pipes) = ((spec \ "input" \ "pipelines"): @unchecked)
-    val norm = spec \ "input" \ "normalization" match {
-      case JString(s) => s
-      case JNothing   => "none"
-      case other => throw new IllegalArgumentException(
-        s"$$scoreFusion normalization: $other")
-    }
-    val weights: Map[String, Double] = spec \ "combination" \ "weights" match {
-      case JObject(ws) => ws.map { case (n, v) => n -> (v match {
-        case JInt(i) => i.toDouble; case JLong(l) => l.toDouble
-        case JDouble(d) => d; case _ => 1.0 }) }.toMap
-      case _ => Map.empty
-    }
-    val allowed = Set("$match", "$sort", "$limit", "$skip", "$sample",
-      "$vectorSearch", "$search", "$score")
+  private def scoreFusion(df: DataFrame, f: Fusion, ctx: DynCtx): DataFrame = {
+    val norm = f.normalization
     val idOp = DynExpr.compile(JString("$_id"))
-    val nPipes = pipes.size
-    val contribs = pipes.map { case (pname, pstages) =>
-      val JArray(stages) = (pstages: @unchecked)
-      val names = stages.collect { case JObject(fs) =>
-        fs.collectFirst { case (n, _) if n != "_trace" => n }.getOrElse("") }
-      val bad = names.filterNot(allowed)
-      if (bad.nonEmpty) throw new IllegalArgumentException(
-        s"$$scoreFusion pipeline '$pname': only selection/scoring stages " +
-          s"(${allowed.mkString(" ")}) are allowed, got ${bad.mkString(" ")}")
+    val nPipes = f.inputs.size
+    val contribs = f.inputs.map { case (pname, stages) =>
+      val names = stages.map(_.name)
       val scoreField =
         if (names.contains("$score")) "$__score"
         else if (names.contains("$vectorSearch")) "$__vsScore"
-        else if (names.contains("$search")) "$__searchScore"
-        else throw new IllegalArgumentException(
-          s"$$scoreFusion pipeline '$pname' must produce a score: " +
-            "include $score, $vectorSearch or $search")
+        else "$__searchScore"
       // Fused bridge: when the pipeline is doc-local stages ending in
       // `$score` (the common shape), evaluate the whole pipeline + the
       // _id/score extraction in ONE mapPartitions pass — the generic path
       // below costs 3 extra parse/render round trips of every doc (score
       // barrier, embedScore, re-extract), which made this the slowest
       // dynamic pole.
-      val lastScoreSpec = stages.lastOption.collect {
-        case JObject(List(("$score", sp))) => sp }
-      val prefixFns = lastScoreSpec.flatMap { _ =>
-        stages.init.foldLeft(Option(List.empty[DocFn])) {
-          case (Some(acc), JObject(List((n, sp))))
-              if builtinStages(n) || !ctx.extensions.contains(n) =>
-            compileDocStage(n, sp).map(acc :+ _)
-          case _ => None
-        }
+      val lastScore = stages.lastOption.collect { case Stage(_, _, _, _, s: Score) => s }
+      val prefixFns = lastScore.collect {
+        case _ if stages.init.forall(_.info.fusable) => stages.init.map(compileDocStage)
       }
-      val extracted = (lastScoreSpec, prefixFns) match {
-        case (Some(scoreSpec), Some(fns)) =>
-          val sOp = DynExpr.compile(scoreSpec \ "score")
-          val snorm = scoreSpec \ "normalization" match {
-            case JString(s) => s
-            case JNothing   => "none"
-            case other => throw new IllegalArgumentException(
-              s"$$score normalization: $other")
-          }
+      val extracted = (lastScore, prefixFns) match {
+        case (Some(sc), Some(fns)) =>
+          val sOp = DynExpr.compile(sc.score)
           val composed: DocFn = fns match {
             case Nil           => (m: Msg) => Iterator.single(m)
             case single :: Nil => single
@@ -1981,10 +1746,10 @@ object DynPipeline {
             }
           }(Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING,
             Encoders.DOUBLE)).toDF("key", "doc", "__fid", "__s")
-          normScore(raw, snorm)
+          graft.Stages.normalizeScore(raw, "__s", sc.normalization)
         case _ =>
           val sOp = DynExpr.compile(JString(scoreField))
-          val out = run(df, pstages, ctx, keepScores = true)
+          val out = run(df, stages, ctx, keepScores = true)
           normalize(out).as(tuple2Enc).mapPartitions { it =>
             it.map { case (k, s) =>
               val dctx = DynExpr.DCtx(parse(s), Map.empty)
@@ -1993,8 +1758,8 @@ object DynPipeline {
           }(Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING,
             Encoders.DOUBLE)).toDF("key", "doc", "__fid", "__s")
       }
-      val w = weights.getOrElse(pname, 1d)
-      normScore(extracted, norm)
+      val w = f.weights.getOrElse(pname, 1d)
+      graft.Stages.normalizeScore(extracted, "__s", norm)
         .select(col("key"), col("doc"), col("__fid"),
           (lit(w) * col("__s")).as("__ws"))
     }
@@ -2029,6 +1794,7 @@ object DynPipeline {
       case JNothing    => List("count" -> JObject(List("$sum" -> JInt(1))))
       case other => throw new IllegalArgumentException(s"$$bucketAuto output: $other")
     }
+    val accs = StageSpec.accumulators(outputs) // before the ranking runs its jobs
     val exSchema = StructType(Seq(StructField("key", StringType),
       StructField("doc", StringType), StructField("__b", BinaryType),
       StructField("__gv", StringType)))
@@ -2053,11 +1819,8 @@ object DynPipeline {
           (k, render(d))
         }
       }(tuple2Enc).toDF("key", "doc")
-    val grouped = group(docs2, JObject(List(
-      "_id" -> JString("$__bucket"),
-      "__min" -> JObject(List("$min" -> JString("$__gv"))),
-      "__max" -> JObject(List("$max" -> JString("$__gv"))))
-      ++ outputs))
+    val grouped = group(docs2, Group(JString("$__bucket"),
+      Acc("__min", "$min", JString("$__gv")) :: Acc("__max", "$max", JString("$__gv")) :: accs))
     val gSchema = StructType(Seq(StructField("key", StringType),
       StructField("doc", StringType), StructField("__id", LongType),
       StructField("__minC", StringType)))
@@ -2211,15 +1974,8 @@ object DynPipeline {
   /** $group: map-side canonical key extraction, ONE fused DynGroupAgg for
     * every accumulator (partial aggregation before the single shuffle),
     * then a per-group document assembly. Output key = canonical _id. */
-  private def group(df: DataFrame, spec: JValue): DataFrame = {
-    val (idSpec, accSpec) = spec match {
-      case JObject(fs) =>
-        val id = fs.collectFirst { case ("_id", v) => v }
-          .getOrElse(throw new IllegalArgumentException("$group needs _id"))
-        (id, JObject(fs.filterNot(_._1 == "_id")))
-      case other => throw new IllegalArgumentException(s"$$group: $other")
-    }
-    val idOp = DynExpr.compile(idSpec)
+  private def group(df: DataFrame, g: Group): DataFrame = {
+    val idOp = DynExpr.compile(g.id)
     val keyed = df.as(tuple2Enc).mapPartitions { it =>
       it.map { case (_, s) =>
         val doc = parse(s)
@@ -2227,9 +1983,8 @@ object DynPipeline {
       }
     }(tuple2Enc).toDF("__gkey", "doc")
 
-    val accJson = org.json4s.jackson.JsonMethods.compact(org.json4s.jackson.JsonMethods.render(accSpec))
     val aggCol: Column = ColumnBridge.column(
-      graft.functions.DynGroupAgg(ColumnBridge.expression(col("doc")), accJson)
+      graft.functions.DynGroupAgg(ColumnBridge.expression(col("doc")), g.accs)
         .toAggregateExpression())
     val agged = keyed.groupBy(col("__gkey")).agg(aggCol.as("__aggs"))
 
@@ -2258,146 +2013,31 @@ object DynPipeline {
     * $expMovingAvg) and `window.range` frames ride a numeric axis column
     * (numbers as-is, dates as epoch millis, `unit`-rescaled) — same shapes
     * as the typed engine, incl. the incremental [[graft.functions.EmaAgg]]. */
-  private def setWindowFields(df: DataFrame, spec: JValue): DataFrame = {
+  private def setWindowFields(df: DataFrame, w: SetWindowFields): DataFrame = {
     import org.apache.spark.sql.expressions.{Window, WindowSpec}
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.Row
 
-    val partOp = spec \ "partitionBy" match {
-      case JNothing | JNull => None
-      case p                => Some(DynExpr.compile(p))
-    }
-    val sortOps: List[(DynExpr.DOp, Boolean)] = spec \ "sortBy" match {
-      case JObject(ks) => ks.map { case (f, d) =>
-        (DynExpr.compile(JString("$" + f)), d match {
-          case JInt(i)    => i >= 0
-          case JLong(l)   => l >= 0
-          case JDouble(x) => x >= 0
-          case _          => true
-        })
+    val partOp = w.partitionBy.map(DynExpr.compile)
+    val sortOps: List[(DynExpr.DOp, Boolean)] =
+      w.sortBy.map { case (f, asc) => (DynExpr.compile(JString("$" + f)), asc) }
+    /** One output's compiled expressions ($top family: `sortOut` keys). */
+    case class Out(o: WinOut) {
+      val (op, frame, rangeFrame, runit, unit) =
+        (o.op, o.frame.documents, o.frame.range, o.frame.unit, o.unit)
+      val input: Option[DynExpr.DOp] =
+        if (StageSpec.rankOps(op)) None else Some(DynExpr.compile(o.input))
+      val input2: Option[DynExpr.DOp] = o.y match {
+        case JNothing => None
+        case y        => Some(DynExpr.compile(y))
       }
-      case _ => Nil
+      val default: Option[String] = o.default.map(d =>
+        org.json4s.jackson.JsonMethods.compact(org.json4s.jackson.JsonMethods.render(d)))
+      val sortOut: List[(DynExpr.DOp, Boolean)] =
+        o.sortBy.map { case (f, asc) => (DynExpr.compile(JString("$" + f)), asc) }
     }
-    val rankOps = Set("$rank", "$denseRank", "$documentNumber")
-    case class Out(name: String, op: String, input: Option[DynExpr.DOp],
-        by: Int, default: Option[String], frame: Option[(Long, Long)],
-        input2: Option[DynExpr.DOp] = None, alpha: Double = 0d,
-        unit: Option[String] = None,
-        rangeFrame: Option[(Long, Long)] = None, runit: Option[String] = None,
-        ps: List[Double] = Nil, n: Int = 0,
-        sortOut: List[(DynExpr.DOp, Boolean)] = Nil)
-    def bound(v: JValue, isLo: Boolean): Long = v match {
-      case JString("unbounded") => if (isLo) Long.MinValue else Long.MaxValue
-      case JString("current")   => 0L
-      case JInt(i)              => i.toLong
-      case other => throw new IllegalArgumentException(s"window bound: $other")
-    }
-    val JObject(outsJ) = ((spec \ "output"): @unchecked)
-    val outs: List[Out] = outsJ.map { case (name, o) =>
-      val JObject(fields) = (o: @unchecked)
-      val (op, opSpec) = fields.filterNot(_._1 == "window").head
-      val winSpec = fields.collectFirst { case ("window", w) => w }
-      val frame = winSpec.flatMap(w => w \ "documents" match {
-        case JArray(List(lo, hi)) =>
-          Some((bound(lo, isLo = true), bound(hi, isLo = false)))
-        case _ => None
-      })
-      val rangeFrame = winSpec.flatMap(w => w \ "range" match {
-        case JArray(List(lo, hi)) =>
-          Some((bound(lo, isLo = true), bound(hi, isLo = false)))
-        case _ => None
-      })
-      val runit = winSpec.flatMap(w => w \ "unit" match {
-        case JString(u) => Some(u); case _ => None
-      })
-      op match {
-        case "$shift" =>
-          val by = opSpec \ "by" match { case JInt(i) => i.toInt; case _ => 1 }
-          val dflt = opSpec \ "default" match {
-            case JNothing => None
-            case d => Some(org.json4s.jackson.JsonMethods.compact(
-              org.json4s.jackson.JsonMethods.render(d)))
-          }
-          Out(name, op, Some(DynExpr.compile(opSpec \ "output")), by, dflt,
-            frame, rangeFrame = rangeFrame, runit = runit)
-        case r if rankOps(r) =>
-          require(sortOps.nonEmpty, s"$r requires sortBy")
-          Out(name, op, None, 0, None, frame,
-            rangeFrame = rangeFrame, runit = runit)
-        case "$covariancePop" | "$covarianceSamp" =>
-          val JArray(List(x, y)) = (opSpec: @unchecked)
-          Out(name, op, Some(DynExpr.compile(x)), 0, None, frame,
-            input2 = Some(DynExpr.compile(y)),
-            rangeFrame = rangeFrame, runit = runit)
-        case "$derivative" | "$integral" =>
-          require(sortOps.nonEmpty, s"$op requires sortBy")
-          Out(name, op, Some(DynExpr.compile(opSpec \ "input")), 0, None,
-            frame, unit = opSpec \ "unit" match {
-              case JString(u) => Some(u); case _ => None
-            }, rangeFrame = rangeFrame, runit = runit)
-        case "$expMovingAvg" =>
-          require(sortOps.nonEmpty, s"$op requires sortBy")
-          val alpha = (opSpec \ "alpha", opSpec \ "N") match {
-            case (JDouble(a), JNothing) => a
-            case (JNothing, JInt(n))    => 2d / (n.toDouble + 1d)
-            case (JNothing, JLong(n))   => 2d / (n.toDouble + 1d)
-            case other => throw new IllegalArgumentException(
-              s"$$expMovingAvg needs exactly one of N or alpha: $other")
-          }
-          Out(name, op, Some(DynExpr.compile(opSpec \ "input")), 0, None,
-            frame, alpha = alpha)
-        case "$linearFill" =>
-          require(sortOps.nonEmpty, s"$op requires sortBy")
-          Out(name, op, Some(DynExpr.compile(opSpec)), 0, None, frame)
-        case "$median" =>
-          Out(name, op, Some(DynExpr.compile(opSpec \ "input")), 0, None,
-            frame, rangeFrame = rangeFrame, runit = runit)
-        case "$percentile" =>
-          val ps = opSpec \ "p" match {
-            case JArray(l) => l.map {
-              case JDouble(d) => d; case JInt(i) => i.toDouble
-              case other => throw new IllegalArgumentException(s"$$percentile p: $other")
-            }
-            case other => throw new IllegalArgumentException(s"$$percentile p: $other")
-          }
-          Out(name, op, Some(DynExpr.compile(opSpec \ "input")), 0, None,
-            frame, rangeFrame = rangeFrame, runit = runit, ps = ps)
-        case "$minN" | "$maxN" | "$firstN" | "$lastN" =>
-          val n = opSpec \ "n" match {
-            case JInt(i) if i > 0 => i.toInt
-            case other => throw new IllegalArgumentException(s"$op n: $other")
-          }
-          Out(name, op, Some(DynExpr.compile(opSpec \ "input")), 0, None,
-            frame, rangeFrame = rangeFrame, runit = runit, n = n)
-        case "$top" | "$bottom" | "$topN" | "$bottomN" =>
-          val nOpt = opSpec \ "n" match {
-            case JInt(i) if i > 0 => Some(i.toInt)
-            case _ => None
-          }
-          if ((op == "$topN" || op == "$bottomN") && nOpt.isEmpty)
-            throw new IllegalArgumentException(s"$op needs a literal n")
-          val JObject(sks) = ((opSpec \ "sortBy"): @unchecked)
-          val sortOut = sks.map { case (f, d) =>
-            (DynExpr.compile(JString("$" + f)), d match {
-              case JInt(i)    => i >= 0
-              case JLong(l)   => l >= 0
-              case JDouble(x) => x >= 0
-              case _          => true
-            })
-          }
-          Out(name, op, Some(DynExpr.compile(opSpec \ "output")), 0, None,
-            frame, rangeFrame = rangeFrame, runit = runit,
-            n = nOpt.getOrElse(1), sortOut = sortOut)
-        case _ => Out(name, op, Some(DynExpr.compile(opSpec)), 0, None, frame,
-          rangeFrame = rangeFrame, runit = runit)
-      }
-    }
-    // ops that ride a NUMERIC axis (the single sortBy value: number, or
-    // date as epoch millis — `unit` rescales in the window expressions)
-    val axisOps = Set("$derivative", "$integral", "$linearFill")
-    val needAxis = outs.exists(o => axisOps(o.op) || o.rangeFrame.nonEmpty)
-    if (needAxis) require(sortOps.size == 1,
-      "$derivative/$integral/$linearFill/range windows need exactly one sortBy field")
+    val outs = w.outputs.map(Out)
+    val needAxis = outs.exists(o => StageSpec.axisOps(o.op) || o.rangeFrame.nonEmpty)
 
     // extraction pass: canonical partition key, binary sort keys, and per-
     // output value columns — documents never re-parse after this point
@@ -2507,18 +2147,9 @@ object DynPipeline {
         if (asc) col(s"__s$i").desc else col(s"__s$i").asc }: _*)
     }
     // Mongo time units in milliseconds (range windows, derivative/integral)
-    def unitMillis(u: String): Long = u match {
-      case "week" => 7L * 24 * 3600 * 1000
-      case "day" => 24L * 3600 * 1000
-      case "hour" => 3600L * 1000
-      case "minute" => 60L * 1000
-      case "second" => 1000L
-      case "millisecond" => 1L
-      case other => throw new IllegalArgumentException(s"window unit: $other")
-    }
     // date axes ride as epoch millis; `unit` rescales them
     def axisFor(unit: Option[String]): Column =
-      unit.fold(col("__x"))(u => col("__x") / lit(unitMillis(u).toDouble))
+      unit.fold(col("__x"))(u => col("__x") / lit(StageSpec.unitMillis(u).toDouble))
     // second slot marks a shrinking frame rewritten onto the reversed sort
     // order; order-SENSITIVE ops must then swap first<->last / reverse lists
     def framedRev(o: Out): (WindowSpec, Boolean) = (o.frame, o.rangeFrame) match {
@@ -2532,7 +2163,7 @@ object DynPipeline {
       case (None, Some((lo, hi))) =>
         // value-distance frame on the numeric axis; unit-scaled bounds for
         // date axes (axis stays in millis, the bounds stretch)
-        val m = o.runit.fold(1L)(unitMillis)
+        val m = o.runit.fold(1L)(StageSpec.unitMillis)
         def base(asc: Boolean) = Window.partitionBy(col("__p"))
           .orderBy(if (asc) col("__x").asc else col("__x").desc)
         if (hi == Long.MaxValue && lo != Long.MinValue)
@@ -2544,7 +2175,7 @@ object DynPipeline {
           (base(sortOps.head._2).rangeBetween(l, h), false)
         }
       case (None, None)
-          if (rankOps(o.op) || o.op == "$shift") && sortOps.nonEmpty =>
+          if (StageSpec.rankOps(o.op) || o.op == "$shift") && sortOps.nonEmpty =>
         (ordered, false)
       case (None, None) => // Mongo default window: the WHOLE partition
         // ("unbounded" both sides) even when sortBy is given
@@ -2590,14 +2221,14 @@ object DynPipeline {
           val packed = when(col(s"__b$i").isNotNull,
             struct(col(s"__b$i").as("b"), col(s"__c$i").as("c")))
           transform(graft.functions.BoundedTopK.sortedTopK(packed,
-            Seq(o.op == "$minN"), o.n).over(framed(o)), _.getField("c"))
+            Seq(o.op == "$minN"), o.o.n).over(framed(o)), _.getField("c"))
         case "$firstN" | "$lastN" =>
           val (f, rev) = framedRev(o)
           val packed = struct(col(s"__c$i").as("c"))
           val takeFirst = (o.op == "$firstN") != rev
           val kept = (if (takeFirst)
-            graft.functions.BoundedTopK.firstN(packed, o.n)
-          else graft.functions.BoundedTopK.lastN(packed, o.n)).over(f)
+            graft.functions.BoundedTopK.firstN(packed, o.o.n)
+          else graft.functions.BoundedTopK.lastN(packed, o.o.n)).over(f)
           transform(if (rev) reverse(kept) else kept, _.getField("c"))
         case "$top" | "$bottom" | "$topN" | "$bottomN" =>
           // packed (BSON-binary sort keys..., canonical output) kept
@@ -2612,16 +2243,16 @@ object DynPipeline {
             case "$top" => element_at(keep(dirs, 1), 1).getField("c")
             case "$bottom" => element_at(keep(dirs.map(!_), 1), 1).getField("c")
             case "$topN" =>
-              transform(keep(dirs, o.n), _.getField("c"))
+              transform(keep(dirs, o.o.n), _.getField("c"))
             case _ =>
-              transform(reverse(keep(dirs.map(!_), o.n)), _.getField("c"))
+              transform(reverse(keep(dirs.map(!_), o.o.n)), _.getField("c"))
           }
         case "$stdDevPop"  => stddev_pop(col(s"__v$i")).over(framed(o))
         case "$stdDevSamp" => stddev_samp(col(s"__v$i")).over(framed(o))
         case "$median" =>
           percentile(col(s"__v$i"), lit(0.5)).over(framed(o))
         case "$percentile" =>
-          percentile(col(s"__v$i"), array(o.ps.map(lit): _*)).over(framed(o))
+          percentile(col(s"__v$i"), array(o.o.ps.map(lit): _*)).over(framed(o))
         case "$covariancePop" =>
           covar_pop(col(s"__v$i"), col(s"__w$i")).over(framed(o))
         case "$covarianceSamp" =>
@@ -2679,7 +2310,7 @@ object DynPipeline {
           when(v.isNotNull, v).otherwise(
             prevV + (nextV - prevV) * (x - prevX) / (nextX - prevX))
         case "$expMovingAvg" =>
-          graft.functions.EmaAgg.ema(col(s"__v$i"), o.alpha).over(
+          graft.functions.EmaAgg.ema(col(s"__v$i"), o.o.alpha).over(
             ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow))
         case "$rank"           => rank().over(ordered)
         case "$denseRank"      => dense_rank().over(ordered)
@@ -2689,11 +2320,10 @@ object DynPipeline {
           // the non-null string "null", so the coalesce fires ONLY when the
           // shifted-to position is outside the partition (SQL null from
           // lead/lag) — exactly Mongo's default rule, same as typed Lead/Lag
-          val s0 = (if (o.by >= 0) lead(col(s"__c$i"), o.by)
-                    else lag(col(s"__c$i"), -o.by)).over(ordered)
+          val by = o.o.by
+          val s0 = (if (by >= 0) lead(col(s"__c$i"), by)
+                    else lag(col(s"__c$i"), -by)).over(ordered)
           o.default.map(d => coalesce(s0, lit(d))).getOrElse(s0)
-        case other =>
-          throw new IllegalArgumentException(s"$$setWindowFields operator $other")
       }
       acc.withColumn(s"__r$i", c)
     }
@@ -2745,7 +2375,7 @@ object DynPipeline {
             case _ => // $count / rank family: integer-valued
               nodes.numberNode(r.getAs[Number](idx).longValue)
           }
-          doc.set[JsonNode](o.name, node)
+          doc.set[JsonNode](o.o.field, node)
         }
         (if (r.isNullAt(0)) null else r.getString(0), render(doc))
       }
@@ -2755,18 +2385,10 @@ object DynPipeline {
   /** `$sort` in dynamic mode: each sort key rides as a
     * [[DynJson.sortableKey]] binary column, so the global range exchange
     * orders by the cross-type BSON order without a comparator UDF. */
-  private def sortStage(df: DataFrame, spec: JValue): DataFrame = {
+  private def sortStage(df: DataFrame, keys: List[(String, Boolean)]): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
-    val JObject(keys) = (spec: @unchecked)
-    val ops = keys.map { case (f, dir) =>
-      (DynExpr.compile(JString("$" + f)), dir match {
-        case JInt(i)    => i >= 0
-        case JLong(l)   => l >= 0
-        case JDouble(d) => d >= 0
-        case _          => true
-      })
-    }
+    val ops = keys.map { case (f, asc) => (DynExpr.compile(JString("$" + f)), asc) }
     val schema = StructType(Seq(StructField("key", StringType),
       StructField("doc", StringType)) ++
       ops.indices.map(i => StructField(s"__s$i", BinaryType)))
@@ -2787,25 +2409,10 @@ object DynPipeline {
     * the field is a date (epoch millis or ISO-8601 string) carried through
     * the join as an epoch-micros slot, and the grid steps by a calendar
     * interval in UTC (Spark `sequence` over timestamps). */
-  private def densifyStage(df: DataFrame, spec: JValue): DataFrame = {
+  private def densifyStage(df: DataFrame, d: Densify): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val JString(fieldName) = ((spec \ "field"): @unchecked)
-    val partFields: List[String] = spec \ "partitionByFields" match {
-      case JArray(xs) => xs.map { case JString(s) => s
-        case other => throw new IllegalArgumentException(s"partitionByFields: $other") }
-      case JNothing => Nil
-      case other => throw new IllegalArgumentException(s"partitionByFields: $other")
-    }
-    val step = spec \ "range" \ "step" match {
-      case JInt(i) => i.toLong
-      case other => throw new IllegalArgumentException(s"$$densify integer step only: $other")
-    }
-    val unit: Option[String] = spec \ "range" \ "unit" match {
-      case JString(u) => Some(u)
-      case JNothing   => None
-      case other => throw new IllegalArgumentException(s"$$densify unit: $other")
-    }
+    val Densify(fieldName, partFields, step, unit, bounds, explicit) = d
     def micros(i: java.time.Instant): Long =
       i.getEpochSecond * 1000000L + i.getNano / 1000L
     val partOps = partFields.map(f => DynExpr.compile(JString("$" + f)))
@@ -2827,22 +2434,15 @@ object DynPipeline {
       }
     }(Encoders.row(schema))
     def partKeys = extracted.select("__p", "__pj").distinct()
-    val (bounded, exclusiveHi) = spec \ "range" \ "bounds" match {
-      case JString("partition") =>
-        require(partFields.nonEmpty, "bounds: partition needs partitionByFields")
+    val (bounded, exclusiveHi) = (bounds, explicit) match {
+      case ("partition", _) =>
         (extracted.groupBy("__p", "__pj")
           .agg(min(col("__slot")).as("__lo"), max(col("__slot")).as("__hi")), false)
-      case JString("full") =>
+      case (_, Some((lo, hi))) => // [lo, hi): ints, or epoch micros for dates
+        (partKeys.withColumn("__lo", lit(lo)).withColumn("__hi", lit(hi)), true)
+      case _ => // full
         val g = extracted.agg(min(col("__slot")).as("__lo"), max(col("__slot")).as("__hi"))
         (partKeys.crossJoin(broadcast(g)), false)
-      case JArray(List(lo, hi)) =>
-        def n(v: JValue): Long = (v, unit) match {
-          case (JInt(i), None) => i.toLong
-          case (JString(s), Some(_)) => micros(java.time.Instant.parse(s))
-          case other => throw new IllegalArgumentException(s"bounds: $other")
-        }
-        (partKeys.withColumn("__lo", lit(n(lo))).withColumn("__hi", lit(n(hi))), true)
-      case other => throw new IllegalArgumentException(s"$$densify bounds: $other")
     }
     // exclusive hi: ints step on a unit grid so hi-1 is exact; Mongo dates
     // are millisecond-precision so hi-1ms (1000 micros) is the strict bound
@@ -2881,38 +2481,23 @@ object DynPipeline {
     * rewrite to ONE `$setWindowFields` pass (`$locf` / `$linearFill` —
     * the typed engine's rewrite exactly); `value: <expr>` fields are a
     * fused per-document `$ifNull` (no shuffle). */
-  private def fillStage(df: DataFrame, spec: JValue): DataFrame = {
-    val JObject(outs) = ((spec \ "output"): @unchecked)
-    val (windowed, rest) = outs.partition { case (_, v) =>
-      (v \ "method") == JString("locf") || (v \ "method") == JString("linear") }
-    rest.foreach { case (f, v) =>
-      if ((v \ "value") == JNothing) throw new IllegalArgumentException(
-        s"$$fill $f: only method: locf|linear and value: <expr> are supported")
-    }
+  private def fillStage(df: DataFrame, f: Fill): DataFrame = {
     val afterWindowed =
-      if (windowed.isEmpty) df
-      else setWindowFields(df, JObject(List(
-        "partitionBy" -> (spec \ "partitionBy"),
-        "sortBy" -> (spec \ "sortBy"),
-        "output" -> JObject(windowed.map { case (f, v) =>
-          f -> (if ((v \ "method") == JString("locf"))
-            JObject(List("$locf" -> JString("$" + f)))
-          else JObject(List("$linearFill" -> JString("$" + f)))) }))))
-    if (rest.isEmpty) afterWindowed
-    else applyFused(afterWindowed, List(addFields(JObject(rest.map { case (f, v) =>
-      f -> JObject(List("$ifNull" -> JArray(List(JString("$" + f), v \ "value"))))
+      if (f.locf.isEmpty && f.linear.isEmpty) df
+      else setWindowFields(df, SetWindowFields(f.partitionBy, f.sortBy,
+        f.locf.map(x => WinOut(x, "$locf", JString("$" + x), Frame())) ++
+          f.linear.map(x => WinOut(x, "$linearFill", JString("$" + x), Frame()))))
+    if (f.values.isEmpty) afterWindowed
+    else applyFused(afterWindowed, List(addFields(JObject(f.values.map { case (x, v) =>
+      x -> JObject(List("$ifNull" -> JArray(List(JString("$" + x), v))))
     }))))
   }
 
   /** $deduplicate on an expression (canonical Mongo equality): first doc per
     * key wins within a partition; cross-partition winner is arbitrary, like
     * the reference's cache race (Deduplicate.java). */
-  private def deduplicate(df: DataFrame, spec: JValue): DataFrame = {
-    val exprSpec = spec match {
-      case JObject(fs) => fs.collectFirst { case ("expression", v) => v }.getOrElse(JString("$_id"))
-      case other       => other
-    }
-    val op = DynExpr.compile(exprSpec)
+  private def deduplicate(df: DataFrame, d: Deduplicate): DataFrame = {
+    val op = DynExpr.compile(d.expression)
     val tuple3Enc = Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING)
     df.as(tuple2Enc).mapPartitions { it =>
       it.map { case (k, s) =>

@@ -41,7 +41,7 @@ import scala.jdk.CollectionConverters._
   */
 case class DynGroupAgg(
     child: Expression,
-    specJson: String,
+    specs: List[graft.StageSpec.Acc],
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Array[JsonNode]] {
@@ -51,45 +51,16 @@ case class DynGroupAgg(
   /** One accumulator's compiled form: the input/output expression plus the
     * structured extras of the modern accumulators (n, percentiles, sortBy). */
   private final case class Acc(field: String, op: String, expr: DynExpr.DOp,
-      n: Int = 0, ps: List[Double] = Nil,
-      sort: List[(DynExpr.DOp, Boolean)] = Nil)
+      n: Int, ps: List[Double], sort: List[(DynExpr.DOp, Boolean)])
 
-  private val structuredOps = Set("$median", "$percentile", "$maxN", "$minN",
-    "$firstN", "$lastN", "$top", "$bottom", "$topN", "$bottomN")
   private val topOps = Set("$top", "$bottom", "$topN", "$bottomN")
 
-  /** Per-accumulator compiled specs; compiled lazily on each executor from
-    * the serializable spec JSON. */
-  @transient private lazy val accs: Array[Acc] = {
-    val spec = parse(specJson)
-    spec.asInstanceOf[ObjectNode].fields().asScala.map { e =>
-      val acc = e.getValue.asInstanceOf[ObjectNode]
-      val op = acc.fieldNames().next()
-      val arg = acc.get(op)
-      def compileJ(n: JsonNode) = DynExpr.compile(DynStagesJson.toJValue(n))
-      if (!structuredOps(op) || !arg.isObject)
-        Acc(e.getKey, op, compileJ(arg))
-      else {
-        val o = arg.asInstanceOf[ObjectNode]
-        val expr = compileJ(
-          if (o.has("input")) o.get("input")
-          else if (o.has("output")) o.get("output")
-          else throw new IllegalArgumentException(s"$op needs input/output"))
-        val n = if (o.has("n")) o.get("n").intValue else 1
-        val ps = if (o.has("p")) o.get("p").asScala.map(_.doubleValue).toList
-                 else if (op == "$median") List(0.5) else Nil
-        val sort =
-          if (!o.has("sortBy")) Nil
-          else o.get("sortBy").asInstanceOf[ObjectNode].fields().asScala.map { s =>
-            (DynExpr.compile(org.json4s.JString("$" + s.getKey)),
-              s.getValue.asDouble(1d) >= 0)
-          }.toList
-        if (topOps(op) && sort.isEmpty)
-          throw new IllegalArgumentException(s"$op needs sortBy")
-        Acc(e.getKey, op, expr, n, ps, sort)
-      }
-    }.toArray
-  }
+  /** Per-accumulator compiled forms of the driver-validated specs
+    * ([[graft.StageSpec.accumulators]]), compiled lazily on each executor. */
+  @transient private lazy val accs: Array[Acc] = specs.map { a =>
+    Acc(a.field, a.op, DynExpr.compile(a.input), a.n, a.ps,
+      a.sortBy.map { case (f, asc) => (DynExpr.compile(org.json4s.JString("$" + f)), asc) })
+  }.toArray
 
   /** Sort-order comparator for `$top`-family packed nodes `{s: [...], o}`:
     * each key compares in the Mongo cross-type order, direction applied. */
@@ -244,8 +215,6 @@ case class DynGroupAgg(
       // sorted in sortBy order; $top/$topN keep the front, $bottom* the back
       sortedInsert(a, value, acc.n,
         keepFront = acc.op == "$top" || acc.op == "$topN", cmpPacked(acc.sort))
-    case other =>
-      throw new IllegalArgumentException(s"dynamic $$group: unsupported accumulator $other")
   }
 
   override def merge(a: Array[JsonNode], b: Array[JsonNode]): Array[JsonNode] = {
@@ -321,8 +290,6 @@ case class DynGroupAgg(
           a, v, acc.n, keepFront = op == "$top" || op == "$topN",
           cmpPacked(acc.sort)))
         a
-      case other =>
-        throw new IllegalArgumentException(s"dynamic $$group: unsupported accumulator $other")
     }
   }
 
@@ -389,8 +356,6 @@ case class DynGroupAgg(
         cur.asInstanceOf[ArrayNode].asScala.foreach(e => a.add(e.get("o")))
         a
       }
-    case other =>
-      throw new IllegalArgumentException(s"dynamic $$group: unsupported accumulator $other")
   }
 
   /** Buffers serialize as one JSON array; each slot wraps its value in a
@@ -421,10 +386,4 @@ case class DynGroupAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): DynGroupAgg =
     copy(child = newChildren.head)
-}
-
-/** Jackson → json4s bridge for specs that were carried as rendered JSON. */
-object DynStagesJson {
-  def toJValue(n: JsonNode): org.json4s.JValue =
-    org.json4s.jackson.JsonMethods.parse(DynJson.render(n))
 }

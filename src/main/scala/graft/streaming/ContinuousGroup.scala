@@ -29,15 +29,10 @@ object ContinuousGroup {
 
   private final case class Acc(name: String, op: String, outType: DataType)
 
-  def apply(df: DataFrame, spec: JValue): DataFrame = {
+  def apply(df: DataFrame, g: graft.StageSpec.Group): DataFrame = {
     implicit val ctx: graft.mongo.ExprCtx = Stages.ctxFor(df)
-    val JObject(fields) = (spec: @unchecked)
-    val idSpec = fields.find(_._1 == "_id").map(_._2)
-      .getOrElse(throw new IllegalArgumentException("$group needs _id"))
-    val accSpecs: List[(String, String, JValue)] = fields.collect {
-      case (name, JObject((op, s) :: Nil)) if name != "_id" && name != "_collection" =>
-        (name, op, s)
-    }
+    val idSpec = g.id
+    val accSpecs = g.accs.map(a => (a.field, a.op, a.input))
 
     val ALL = "\u0000__ALL__" // sentinel that can't collide with a real key
     val keyCol = idSpec match {

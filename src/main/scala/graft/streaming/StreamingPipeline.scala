@@ -1,11 +1,10 @@
 package graft.streaming
 
-import graft.Pipeline
+import graft.{Pipeline, StageSpec}
+import graft.StageSpec.Stage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
-import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 /** Runs a Mongo pipeline over an unbounded (Structured Streaming) DataFrame.
   *
@@ -29,30 +28,10 @@ import org.json4s.jackson.JsonMethods
   */
 final class StreamingPipeline(pipeline: Pipeline) {
 
-  private[graft] def split(pipelineJson: String): (JValue, JValue) =
-    StreamSplit.split(pipelineJson)
-
   /** Transform the streaming frame with the native prefix. The caller owns
     * the writeStream; use [[start]] for the full pipeline incl. sinks. */
-  def run(stream: DataFrame, pipelineJson: String): DataFrame = {
-    val (native, rest) = split(pipelineJson)
-    require(rest == JArray(Nil),
-      s"pipeline contains sink or batch-only stages — use start(): $rest")
-    pipeline.run(stream, native)
-  }
-
-  /** True when the native prefix contains a `_continuous: true` `$group` —
-    * that compiles to flatMapGroupsWithState(Append), which Spark only allows
-    * in an append-output-mode query. */
-  private[graft] def hasContinuousGroup(native: JValue): Boolean = native match {
-    case JArray(stages) => stages.exists {
-      case JObject(fields) => fields.exists { case (n, spec) =>
-        n == "$group" && (spec \ "_continuous") == JBool(true)
-      }
-      case _ => false
-    }
-    case _ => false
-  }
+  def run(stream: DataFrame, pipelineJson: String): DataFrame =
+    StreamSplit.run(stream, pipelineJson, pipeline.run)
 
   /** Run the whole pipeline: native prefix on the stream, sink suffix (if
     * any) + `collect` callback per micro-batch. Update output mode so `$group`
@@ -71,22 +50,15 @@ final class StreamingPipeline(pipeline: Pipeline) {
       trigger: Trigger = Trigger.AvailableNow(),
       checkpoint: Option[String] = None,
       batchGuard: Option[BatchGuard] = None,
-      outputMode: Option[String] = None): StreamingQuery = {
-    val (native, rest) = split(pipelineJson)
-    val transformed = pipeline.run(stream, native)
-    val mode = outputMode.getOrElse(
-      if (hasContinuousGroup(native)) "append" else "update")
-    val writer: DataStreamWriter[Row] = transformed.writeStream
-      .outputMode(mode)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batchGuard match {
-          case Some(g) => g.once(batchId) { collect(pipeline.run(batch, rest)) }
-          case None    => collect(pipeline.run(batch, rest))
-        }
-      }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
-  }
+      outputMode: Option[String] = None): StreamingQuery =
+    // a `_continuous: true` $group compiles to flatMapGroupsWithState
+    // (Append), which Spark only allows in an append-output-mode query
+    StreamSplit.start(stream, pipelineJson, pipeline.run, collect, trigger,
+      checkpoint, batchGuard, native => outputMode.getOrElse(
+        if (native.exists(_.args match {
+          case g: StageSpec.Group => g.continuous
+          case _                  => false
+        })) "append" else "update"))
 }
 
 object StreamingPipeline {
@@ -126,35 +98,38 @@ object StreamingPipeline {
   * and the dynamic (schemaless) streaming runners. */
 private[streaming] object StreamSplit {
 
-  private val sinkStages =
-    Set("$merge", "$out", "$delete", "$send", "$delay", "$probe", "$per", "$http")
+  /** Split the parsed pipeline: the longest prefix with no sink, external
+    * effect or batch-only stage ([[StageSpec.Info.splitsStream]]) runs
+    * natively on the stream; the remainder runs per micro-batch in
+    * foreachBatch, i.e. with PER-MICRO-BATCH semantics — windows and sorts
+    * see one batch at a time, the only meaning they can have on an
+    * infinite input. */
+  def split(pipelineJson: String): (List[Stage], List[Stage]) =
+    StageSpec.parse(pipelineJson).span(!_.info.splitsStream)
 
-  /** Stages Spark cannot run natively on an unbounded stream (windows,
-    * global sorts, gap generation, stream-static union, facets). They split
-    * the pipeline like a sink does: everything from the first one on runs
-    * inside foreachBatch, i.e. with PER-MICRO-BATCH semantics — windows and
-    * sorts see one batch at a time, which is the only meaning they can have
-    * on an infinite input. */
-  private val batchOnlyStages = Set("$setWindowFields", "$fill", "$densify",
-    "$sort", "$limit", "$skip", "$sample", "$sortByCount", "$unionWith",
-    "$facet", "$graphLookup", "$bucketAuto", "$vectorSearch", "$documents",
-    "$rankFusion", "$search", "$geoNear")
-
-  private def stageName(stage: JValue): String = stage match {
-    case JObject(fields) => fields.collectFirst {
-      case (n, _) if n != "_trace" => n
-    }.getOrElse("")
-    case _ => ""
+  def run(stream: DataFrame, pipelineJson: String,
+      runStages: (DataFrame, List[Stage]) => DataFrame): DataFrame = {
+    val (native, rest) = split(pipelineJson)
+    require(rest.isEmpty, "pipeline contains sink or batch-only stages — " +
+      s"use start(): ${rest.map(_.name).mkString(" ")}")
+    runStages(stream, native)
   }
 
-  /** Split the pipeline: longest prefix with no sink / batch-only stage
-    * (runs natively on the stream), and the remainder (runs per
-    * micro-batch in foreachBatch). */
-  def split(pipelineJson: String): (JValue, JValue) = {
-    val JArray(stages) = (JsonMethods.parse(pipelineJson): @unchecked)
-    val (native, rest) = stages.span(s => !sinkStages.contains(stageName(s)) &&
-      !batchOnlyStages.contains(stageName(s)))
-    (JArray(native), JArray(rest))
+  /** The `start` body shared by the typed and dynamic runners: native
+    * prefix on the stream, sink suffix + `collect` per micro-batch. */
+  def start(stream: DataFrame, pipelineJson: String,
+      runStages: (DataFrame, List[Stage]) => DataFrame,
+      collect: DataFrame => Unit, trigger: Trigger, checkpoint: Option[String],
+      batchGuard: Option[BatchGuard], mode: List[Stage] => String): StreamingQuery = {
+    val (native, rest) = split(pipelineJson)
+    val writer: DataStreamWriter[Row] = runStages(stream, native).writeStream
+      .outputMode(mode(native))
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        def effect(): Unit = collect(runStages(batch, rest))
+        batchGuard.fold(effect())(_.once(batchId)(effect()))
+      }
+    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
   }
 }
 
@@ -169,32 +144,17 @@ final class DynStreamingPipeline(
 
   /** Transform the streaming frame with the native prefix. The caller owns
     * the writeStream; use [[start]] for the full pipeline incl. sinks. */
-  def run(stream: DataFrame, pipelineJson: String): DataFrame = {
-    val (native, rest) = StreamSplit.split(pipelineJson)
-    require(rest == JArray(Nil),
-      s"pipeline contains sink or batch-only stages — use start(): $rest")
-    DynPipeline.run(stream, native, ctx)
-  }
+  def run(stream: DataFrame, pipelineJson: String): DataFrame =
+    StreamSplit.run(stream, pipelineJson, DynPipeline.run(_, _, ctx))
 
   def start(stream: DataFrame, pipelineJson: String,
       collect: DataFrame => Unit,
       trigger: Trigger = Trigger.AvailableNow(),
       checkpoint: Option[String] = None,
       batchGuard: Option[BatchGuard] = None,
-      outputMode: String = "update"): StreamingQuery = {
-    val (native, rest) = StreamSplit.split(pipelineJson)
-    val transformed = DynPipeline.run(stream, native, ctx)
-    val writer: DataStreamWriter[Row] = transformed.writeStream
-      .outputMode(outputMode)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batchGuard match {
-          case Some(g) => g.once(batchId) { collect(DynPipeline.run(batch, rest, ctx)) }
-          case None    => collect(DynPipeline.run(batch, rest, ctx))
-        }
-      }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
-  }
+      outputMode: String = "update"): StreamingQuery =
+    StreamSplit.start(stream, pipelineJson, DynPipeline.run(_, _, ctx), collect,
+      trigger, checkpoint, batchGuard, _ => outputMode)
 }
 
 /** File-marker idempotence for foreachBatch side effects: a batch id runs its

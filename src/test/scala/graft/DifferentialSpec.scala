@@ -711,6 +711,14 @@ class DifferentialSpec extends SparkSpec with DifferentialHarness {
     pipelines.foreach(agree)
   }
 
+  test("_id-only $group is MongoDB's distinct keys in both engines") {
+    Seq("""[{"$group": {"_id": "$s"}}]""",
+      """[{"$group": {"_id": {"$mod": ["$a", 2]}}}]""",
+      """[{"$group": {"_id": null}}]""").foreach(agree)
+    // Alpha, beta, Gamma gamma, delta, eta and the null key
+    assert(dynOut("""[{"$group": {"_id": "$s"}}]""").size == 6)
+  }
+
   test("$setKey stringification parity: scalars via cast, objects/arrays as compact JSON") {
     import graft.Pipeline
     import graft.dynamic.DynPipeline

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 /** Auto-generated operator-coverage manifest (r14 verdict #7): the surface
   * is 200+ queries × 2 engines × ~150 stages/ops, so a hand-maintained
   * coverage table WILL drift. This object extracts every registered
-  * operator straight from the dispatch sources, auto-discovers what pins
+  * operator straight from the dispatch sources (the stage sections from
+  * the shared [[StageSpec.table]]), auto-discovers what pins
   * it (driver queries whose pipeline text uses the op, and spec files that
   * mention it), renders `docs/OPERATORS.md`, and backs the
   * [[OperatorManifestSpec]] guard that fails on any registered-but-unpinned
@@ -74,26 +75,20 @@ object OperatorManifest {
 
   def sections(): Seq[Section] = {
     val pipe = read("src/main/scala/graft/Pipeline.scala")
-    val dynStages = read("src/main/scala/graft/dynamic/DynStages.scala")
-    val typedStages =
-      caseOps(region(pipe, "def applyStage", Some("object Pipeline {")))
-    // builtinStages is a Set LITERAL, not a match — pull the names from it
-    val dynStageOps = """"\$[A-Za-z0-9]+"""".r
-      .findAllIn(region(dynStages, "builtinStages: Set[String] = Set(",
-        Some(")\n")))
-      .map(_.stripPrefix("\"").stripSuffix("\"")).toSeq.distinct.sorted
+    // both engines dispatch every stage in the one StageSpec table
+    val stages = StageSpec.table.keys.toSeq.sorted
     // the Stages object holds group accumulators + $setWindowFields
     // operators; sub-pipeline stage handlers ($match/$sort/... inside
     // $lookup/$facet interpreters) re-appear there — already listed in the
     // stage section, so subtract them
     val accWindow =
       caseOps(region(pipe, "object Pipeline {", None))
-        .filterNot(typedStages.contains)
+        .filterNot(stages.contains)
     Seq(
       Section("Typed pipeline stages",
-        "graft/Pipeline.scala `applyStage`", typedStages),
+        "graft/StageSpec.scala `table`", stages),
       Section("Dynamic pipeline stages",
-        "graft/dynamic/DynStages.scala `builtinStages`", dynStageOps),
+        "graft/StageSpec.scala `table`", stages),
       Section("Typed group accumulators & window operators",
         "graft/Pipeline.scala `Stages`", accWindow),
       Section("Dynamic group accumulators",

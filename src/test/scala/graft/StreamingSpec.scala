@@ -73,6 +73,28 @@ class StreamingSpec extends SparkSpec {
     assert(e.getMessage.contains("use start()"))
   }
 
+  test("$scoreFusion is batch-only on a stream: it runs per micro-batch before $send") {
+    // its fused scores end in a global orderBy, like $rankFusion, which an
+    // unbounded frame cannot plan
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(String, Long)]
+    val sent = scala.collection.mutable.Buffer.empty[(String, Double)]
+    val sp = new StreamingPipeline(new Pipeline(producer = df =>
+      sent ++= df.collect().map(r => (r.getAs[String]("_id"), r.getAs[Double]("__score")))))
+    input.addData(("a", 1L), ("b", 5L))
+    val q = sp.start(input.toDF().toDF("_id", "v"),
+      """[{"$scoreFusion": {"input": {"pipelines": {
+            "p": [{"$score": {"score": "$v"}}]}}}},
+          {"$send": {"topic": "out"}}]""", _ => (),
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    try {
+      q.processAllAvailable()
+      input.addData(("c", 3L))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(sent.toList == List(("b", 5d), ("a", 1d), ("c", 3d)))
+  }
+
   test("streaming sessionization: native session_window closes sessions at the watermark") {
     // the streaming counterpart of operators.Sessionize — Spark's built-in
     // gap-based session_window + watermark emits each session once, when the
